@@ -5,17 +5,15 @@ multi-pass blocking → scoring → best-match) over a transcripts table derived
 deterministically from sf0.001 ``documents``/``customer`` parquet.
 
 ``queries()`` / ``oracle_sql()`` — one entry per implemented operator from
-SURVEY.md §2 plus the training-data-pipeline suite (dedup / ANN / text
-analysis), each runnable at any sf dir and oracle-checked against DuckDB on
-the same parquet. 51 of 52 queries carry full value-hash oracles (SRP ANN
-via emitted hyperplane literals, iterative CC via a recursive CTE,
-multimodal via analytic encode→decode round-trips, the flagship via a
-SQL-decomposed scoring variant); only ``recon_best_matches`` — the
-full-kernel flagship — is rows-only, pytest-oracled by the labeled-pair
-F1 gate and the cluster oracle instead.
+SURVEY.md §2, each runnable at any sf dir and oracle-checked against DuckDB
+on the same parquet. All 31 queries carry full value-hash oracles, the
+flagship's shape via a SQL-decomposed scoring variant
+(``recon_best_matches_sql``); the full-kernel flagship itself is
+``entry()``, pytest-oracled by the labeled-pair F1 gate and the cluster
+oracle instead.
 
 Float discipline: every aggregated/derived double is rounded (2dp money,
-4dp cosines, 6dp ratios) in BOTH engines so summation-order noise cannot
+6dp ratios) in BOTH engines so summation-order noise cannot
 flip the driver's value hash; counts are cast to long on both sides.
 """
 
@@ -795,205 +793,6 @@ def _f18(spark, sf):
     )
 
 
-# ---- streaming twins ---------------------------------------------------------
-
-
-@_q(
-    "st_windowed_rollup",
-    """
-    SELECT date_trunc('hour', ts) AS window_start, event_type,
-           CAST(count(*) AS BIGINT) AS n_events,
-           CAST(round(sum(value), 2) AS DOUBLE) AS sum_value
-    FROM events GROUP BY 1, 2
-    """,
-)
-def _stw(spark, sf):
-    """Batch twin of the Structured Streaming windowed rollup
-    (streaming/events_stream.py) — same logic, oracle-checkable."""
-    from metadata_reconciliation_tool_spark.streaming.events_stream import (
-        windowed_rollup,
-    )
-
-    out = windowed_rollup(_t(spark, sf, "events"))
-    return out.withColumn("sum_value", F.round("sum_value", 2))
-
-
-@_q(
-    "st_sessionize",
-    """
-    SELECT event_id, user_id,
-           CAST(user_id AS VARCHAR) || '_' || CAST(session_seq AS VARCHAR) AS session_id
-    FROM (
-      SELECT event_id, user_id,
-             sum(CASE WHEN gap IS NULL OR gap > 1800 THEN 1 ELSE 0 END)
-               OVER (PARTITION BY user_id ORDER BY ts, event_id
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_seq
-      FROM (
-        SELECT event_id, user_id, ts,
-               epoch(ts) - lag(epoch(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS gap
-        FROM events))
-    """,
-)
-def _sts(spark, sf):
-    """W5 stable ordering + gap sessionization (streaming/events_stream.py
-    sessionize — the stateful-op batch twin)."""
-    from metadata_reconciliation_tool_spark.streaming.events_stream import sessionize
-
-    return sessionize(_t(spark, sf, "events")).select("event_id", "user_id", "session_id")
-
-
-# ---- training-data suite: dedup ------------------------------------------------
-
-
-@_q(
-    "dedup_exact",
-    """
-    SELECT doc_id FROM (
-      SELECT doc_id, row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn
-      FROM documents) WHERE rn = 1
-    """,
-)
-def _dx(spark, sf):
-    """Exact dedup by content hash — keep min doc_id per md5(text)."""
-    from metadata_reconciliation_tool_spark.operators.dedup import exact_dedup
-
-    return exact_dedup(_t(spark, sf, "documents")).select("doc_id")
-
-
-@_q(
-    "dedup_fingerprint",
-    """
-    SELECT doc_id FROM (
-      SELECT doc_id, row_number() OVER (
-        PARTITION BY md5(array_to_string(list_sort(list_distinct(
-          regexp_split_to_array(trim(lower(text)), '\\s+'))), ' '))
-        ORDER BY doc_id) AS rn
-      FROM documents) WHERE rn = 1
-    """,
-)
-def _df(spark, sf):
-    """Order-insensitive token-set fingerprint dedup."""
-    from metadata_reconciliation_tool_spark.operators.dedup import fingerprint_dedup
-
-    return fingerprint_dedup(_t(spark, sf, "documents")).select("doc_id")
-
-
-def _minhash_edges_cte(
-    threshold: float, n_bands: int = 8, rows_per_band: int = 2, cap: int = 1000
-) -> str:
-    """Generate the CTE chain twinning operators/dedup.py:minhash_lsh_pairs:
-    r-row md5-minhash band keys, bucket-size split at ``cap`` (small buckets
-    → all within-bucket pairs; oversized buckets → star against the min-id
-    representative), word-set Jaccard ≥ threshold verify. Ends with an
-    ``edges(left_id, right_id, jaccard)`` CTE."""
-    n = n_bands * rows_per_band
-    mins = ",\n        ".join(
-        f"list_min(list_transform(t, x -> md5('{s}:' || x))) AS mh{s}"
-        for s in range(n)
-    )
-    band_rows = " UNION ALL\n      ".join(
-        f"SELECT doc_id, '{b}:' || "
-        + " || ':' || ".join(f"mh{b * rows_per_band + j}" for j in range(rows_per_band))
-        + " AS bk FROM keys"
-        for b in range(n_bands)
-    )
-    jac = "len(list_intersect(lt.t, rt.t)) * 1.0 / len(list_distinct(lt.t || rt.t))"
-    return f"""
-    toks AS (
-      SELECT doc_id,
-             list_filter(list_distinct(regexp_split_to_array(trim(lower(text)), '\\s+')),
-                         x -> x <> '') AS t
-      FROM documents
-    ), keys AS (
-      SELECT doc_id, {mins}
-      FROM toks
-    ), bands AS (
-      {band_rows}
-    ), bsizes AS (
-      SELECT bk, count(*) AS block_n FROM bands WHERE bk IS NOT NULL GROUP BY bk
-    ), small AS (
-      SELECT b.doc_id, b.bk FROM bands b JOIN bsizes s ON b.bk = s.bk
-      WHERE s.block_n <= {cap}
-    ), big AS (
-      SELECT b.doc_id, b.bk, min(b.doc_id) OVER (PARTITION BY b.bk) AS rep
-      FROM bands b JOIN bsizes s ON b.bk = s.bk
-      WHERE s.block_n > {cap}
-    ), cand AS (
-      SELECT DISTINCT left_id, right_id FROM (
-        SELECT a.doc_id AS left_id, b.doc_id AS right_id
-        FROM small a JOIN small b ON a.bk = b.bk AND a.doc_id < b.doc_id
-        UNION ALL
-        SELECT rep AS left_id, doc_id AS right_id FROM big WHERE doc_id <> rep
-      )
-    ), edges AS (
-      SELECT c.left_id, c.right_id, {jac} AS jaccard
-      FROM cand c JOIN toks lt ON c.left_id = lt.doc_id
-                  JOIN toks rt ON c.right_id = rt.doc_id
-      WHERE {jac} >= {threshold}
-    )"""
-
-
-@_q(
-    "dedup_minhash_lsh",
-    "WITH "
-    + _minhash_edges_cte(0.7)
-    + """
-    SELECT left_id, right_id, CAST(round(jaccard, 6) AS DOUBLE) AS jaccard
-    FROM edges
-    """,
-)
-def _dmh(spark, sf):
-    """MinHash-LSH near-dup pairs (8 bands × 2-row md5-minhash keys,
-    Jaccard ≥ 0.7 verify, oversized buckets star-linked at 1000)."""
-    from metadata_reconciliation_tool_spark.operators.dedup import minhash_lsh_pairs
-
-    out = minhash_lsh_pairs(_t(spark, sf, "documents"))
-    return out.withColumn("jaccard", F.round("jaccard", 6))
-
-
-@_q(
-    "dedup_ngram_jaccard",
-    """
-    WITH toks AS (
-      SELECT doc_id, lang,
-             list_filter(regexp_split_to_array(trim(lower(text)), '\\s+'), x -> x <> '') AS t
-      FROM documents
-    ), sh AS (
-      SELECT doc_id,
-        lang || ':' || CAST(CAST(floor(len(t) / 20.0) AS BIGINT) AS VARCHAR) AS base,
-        list_distinct(list_transform(generate_series(1, greatest(len(t) - 2, 1)),
-          i -> array_to_string(list_slice(t, i, i + 2), ' '))) AS s
-      FROM toks
-    ), banded AS (
-      SELECT doc_id, s,
-        list_min(list_transform(s, x -> md5('0:' || x))) AS b0,
-        list_min(list_transform(s, x -> md5('1:' || x))) AS b1,
-        base
-      FROM sh
-    ), bands AS (
-      SELECT doc_id, s, '0:' || base || ':' || b0 AS bk FROM banded
-      UNION ALL
-      SELECT doc_id, s, '1:' || base || ':' || b1 FROM banded
-    ), ok AS (
-      SELECT * FROM bands
-      WHERE bk NOT IN (SELECT bk FROM bands GROUP BY bk HAVING count(*) > 1000)
-    )
-    SELECT DISTINCT a.doc_id AS left_id, b.doc_id AS right_id,
-           CAST(round(len(list_intersect(a.s, b.s)) * 1.0 /
-                      len(list_distinct(a.s || b.s)), 6) AS DOUBLE) AS ngram_jaccard
-    FROM ok a JOIN ok b ON a.bk = b.bk AND a.doc_id < b.doc_id
-    WHERE len(list_intersect(a.s, b.s)) * 1.0 / len(list_distinct(a.s || b.s)) >= 0.5
-    """,
-)
-def _dng(spark, sf):
-    """Word-3-gram Jaccard near-dup pairs within lang+length+min-shingle-band
-    blocks, oversized blocks dropped (drop-and-report at max_block_size)."""
-    from metadata_reconciliation_tool_spark.operators.dedup import ngram_jaccard_pairs
-
-    out = ngram_jaccard_pairs(_t(spark, sf, "documents"))
-    return out.withColumn("ngram_jaccard", F.round("ngram_jaccard", 6))
-
-
 @_q(
     "multisource_best_match",
     """
@@ -1106,285 +905,7 @@ def _msbm(spark, sf):
     )
 
 
-@_q(
-    "dedup_embedding_cosine",
-    """
-    WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings)
-    SELECT a.vec_id AS left_id, b.vec_id AS right_id,
-           CAST(round(list_cosine_similarity(a.v, b.v), 4) AS DOUBLE) AS cosine
-    FROM e a JOIN e b ON a.label = b.label AND a.vec_id < b.vec_id
-    WHERE round(list_cosine_similarity(a.v, b.v), 4) >= 0.3
-    """,
-)
-def _dec(spark, sf):
-    """Embedding-cosine near-dup pairs within label blocks (IVF-cell
-    analogue), cosine via built-in array exprs — no UDF. Threshold 0.3
-    fits the synthetic embeddings' cosine range (max ≈ 0.47); filtering on
-    the ROUNDED value keeps the boundary identical in both engines."""
-    from metadata_reconciliation_tool_spark.operators.dedup import embedding_dup_pairs
-
-    out = embedding_dup_pairs(_t(spark, sf, "embeddings"), threshold=-1.0)
-    return out.withColumn("cosine", F.round("cosine", 4)).filter(
-        F.col("cosine") >= 0.3
-    )
-
-
-# ---- training-data suite: text analysis ---------------------------------------
-
-
-@_q(
-    "text_token_counts",
-    """
-    SELECT doc_id,
-      CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS BIGINT) AS n_ws,
-      CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]')) AS BIGINT) AS n_bpe
-    FROM documents
-    """,
-)
-def _ttc(spark, sf):
-    """Whitespace + BPE-ish token counting."""
-    from metadata_reconciliation_tool_spark.functions.textstats import (
-        token_count_bpe,
-        token_count_ws,
-    )
-
-    return _t(spark, sf, "documents").select(
-        "doc_id",
-        token_count_ws(F.col("text")).cast("long").alias("n_ws"),
-        token_count_bpe(F.col("text")).cast("long").alias("n_bpe"),
-    )
-
-
-@_q(
-    "text_quality",
-    """
-    WITH base AS (
-      SELECT doc_id, text,
-        (length(text) - length(regexp_replace(text, '[^A-Za-z0-9\\s]', '', 'g'))) * 1.0
-          / greatest(length(text), 1) AS pr,
-        len(list_filter(regexp_split_to_array(trim(lower(text)), '\\s+'),
-            x -> list_contains(['the','a','of','and','to','in','is','for','on','with'], x))) * 1.0
-          / greatest(len(regexp_split_to_array(trim(lower(text)), '\\s+')), 1) AS sr
-      FROM documents)
-    SELECT doc_id,
-      CAST(round(pr, 6) AS DOUBLE) AS punct_ratio,
-      CAST(round(sr, 6) AS DOUBLE) AS stopword_ratio,
-      CAST(round(
-        (CASE WHEN length(text) BETWEEN 50 AND 20000 THEN 1.0
-              WHEN length(text) > 0 THEN 0.5 ELSE 0.0 END) * 0.5
-        + (CASE WHEN pr <= 0.2 THEN 1.0 ELSE 0.5 END) * 0.25
-        + (CASE WHEN sr >= 0.05 THEN 1.0 ELSE 0.5 END) * 0.25, 6) AS DOUBLE) AS quality
-    FROM base
-    """,
-)
-def _tq(spark, sf):
-    """Document quality scoring: length band, punctuation ratio, stopword
-    ratio."""
-    from metadata_reconciliation_tool_spark.functions.textstats import (
-        punct_ratio,
-        quality_score,
-        stopword_ratio,
-    )
-
-    return _t(spark, sf, "documents").select(
-        "doc_id",
-        F.round(punct_ratio(F.col("text")), 6).alias("punct_ratio"),
-        F.round(stopword_ratio(F.col("text")), 6).alias("stopword_ratio"),
-        F.round(quality_score(F.col("text")), 6).alias("quality"),
-    )
-
-
-@_q(
-    "text_langid",
-    """
-    WITH s AS (
-      SELECT doc_id,
-        len(list_intersect(list_distinct(regexp_split_to_array(trim(lower(text)), '\\s+')),
-            ['the','and','of','to','with','for'])) AS s_en,
-        len(list_intersect(list_distinct(regexp_split_to_array(trim(lower(text)), '\\s+')),
-            ['der','die','das','und','mit','für'])) AS s_de,
-        len(list_intersect(list_distinct(regexp_split_to_array(trim(lower(text)), '\\s+')),
-            ['le','la','les','et','avec','pour'])) AS s_fr,
-        len(list_intersect(list_distinct(regexp_split_to_array(trim(lower(text)), '\\s+')),
-            ['el','los','las','y','con','para'])) AS s_es
-      FROM documents)
-    SELECT doc_id, CASE
-      WHEN greatest(s_en, s_de, s_fr, s_es) = 0 THEN 'und'
-      WHEN s_de = greatest(s_en, s_de, s_fr, s_es) THEN 'de'
-      WHEN s_en = greatest(s_en, s_de, s_fr, s_es) THEN 'en'
-      WHEN s_es = greatest(s_en, s_de, s_fr, s_es) THEN 'es'
-      ELSE 'fr' END AS lang_pred
-    FROM s
-    """,
-)
-def _tl(spark, sf):
-    """Stopword-marker language ID with deterministic tie-break (lang code
-    ascending: de < en < es < fr)."""
-    from metadata_reconciliation_tool_spark.functions.textstats import lang_id
-
-    return _t(spark, sf, "documents").select(
-        "doc_id", lang_id(F.col("text")).alias("lang_pred")
-    )
-
-
-@_q(
-    "text_fingerprint",
-    """
-    SELECT doc_id, md5(array_to_string(list_sort(list_distinct(
-      regexp_split_to_array(trim(lower(text)), '\\s+'))), ' ')) AS fingerprint
-    FROM documents
-    """,
-)
-def _tf(spark, sf):
-    """Order-insensitive md5 document fingerprint (F5 lifted to documents)."""
-    from metadata_reconciliation_tool_spark.functions.textstats import doc_fingerprint
-
-    return _t(spark, sf, "documents").select(
-        "doc_id", doc_fingerprint(F.col("text")).alias("fingerprint")
-    )
-
-
-# ---- training-data suite: similarity search ------------------------------------
-
-
-@_q(
-    "ann_brute_force_topk",
-    """
-    WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id < 10),
-         c AS (SELECT vec_id AS neighbor_id, embedding::DOUBLE[] AS cv FROM embeddings)
-    SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank FROM (
-      SELECT query_id, neighbor_id,
-             row_number() OVER (PARTITION BY query_id
-               ORDER BY round(list_cosine_similarity(qv, cv), 6) DESC, neighbor_id) AS rank
-      FROM q JOIN c ON query_id <> neighbor_id)
-    WHERE rank <= 5
-    """,
-)
-def _ann(spark, sf):
-    """Brute-force cosine top-5 (query side = vec_id < 10, broadcast) —
-    the exact-ANN baseline; ranking on round(cos,6) with id tie-break so
-    both engines order identically."""
-    from metadata_reconciliation_tool_spark.operators.similarity_search import (
-        brute_force_topk,
-    )
-
-    emb = _t(spark, sf, "embeddings")
-    return brute_force_topk(emb.filter(F.col("vec_id") < 10), emb, k=5).select(
-        "query_id", "neighbor_id", "rank"
-    )
-
-
-@_q(
-    "ann_srp_lsh_topk",
-    None,  # assembled below — hyperplane literals emitted into generated SQL
-)
-def _annl(spark, sf):
-    """SRP-LSH bucketed ANN (scale path). Planes pinned to 8 here so the
-    SQL twin (seeded hyperplane coefficients emitted as DuckDB list
-    literals) is static; production default derives n_planes from the
-    corpus size (similarity_search.derive_n_planes). Recall vs the
-    brute-force baseline is additionally asserted in pytest."""
-    from metadata_reconciliation_tool_spark.operators.similarity_search import (
-        srp_lsh_topk,
-    )
-
-    emb = _t(spark, sf, "embeddings")
-    return srp_lsh_topk(emb.filter(F.col("vec_id") < 10), emb, k=5, n_planes=8).select(
-        "query_id", "neighbor_id", "rank"
-    )
-
-
-def _srp_oracle_sql(
-    dim: int = 64,
-    n_planes: int = 8,
-    n_tables: int = 4,
-    k: int = 5,
-    max_bucket_size: int = 1024,
-) -> str:
-    """Generate the DuckDB twin of srp_lsh_topk: the seeded hyperplanes are
-    emitted as constant DOUBLE list literals (repr() round-trips float64
-    exactly), bucket bit = sign of list_dot_product against each plane, one
-    bucket CTE per table — corpus rows per bucket capped at
-    ``max_bucket_size`` by lowest vec_id (the operator's hot-bucket cap,
-    twinned) — union of bucket joins, distinct pairs, exact cosine re-rank
-    on round(cos, 6) with neighbor-id tie-break — mirroring the Spark
-    operator term for term."""
-    from metadata_reconciliation_tool_spark.operators.similarity_search import _srp_planes
-
-    table_ctes, cand_selects = [], []
-    for t in range(n_tables):
-        planes = _srp_planes(dim, n_planes, t)
-        bits = " || ".join(
-            "(CASE WHEN list_dot_product(v, ["
-            + ",".join(repr(float(x)) for x in row)
-            + "]) >= 0 THEN '1' ELSE '0' END)"
-            for row in planes
-        )
-        table_ctes.append(
-            f"raw{t} AS (SELECT vec_id, v, '{t}:' || {bits} AS bk FROM e),\n    "
-            f"b{t} AS (SELECT vec_id, v, bk FROM ("
-            f"SELECT vec_id, v, bk,"
-            f" row_number() OVER (PARTITION BY bk ORDER BY vec_id) AS _rn"
-            f" FROM raw{t}) WHERE _rn <= {max_bucket_size})"
-        )
-        # query side probes UNCAPPED (the operator caps only the corpus side)
-        cand_selects.append(
-            f"SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, q.v AS qv, c.v AS cv\n"
-            f"       FROM raw{t} q JOIN b{t} c ON q.bk = c.bk AND q.vec_id < 10"
-        )
-    cands = "\n      UNION ALL\n      ".join(cand_selects)
-    ctes = ",\n    ".join(table_ctes)
-    return f"""
-    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    {ctes},
-    cand AS (
-      SELECT DISTINCT query_id, neighbor_id, qv, cv FROM (
-      {cands}
-      ) WHERE query_id <> neighbor_id
-    )
-    SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank FROM (
-      SELECT query_id, neighbor_id,
-             row_number() OVER (PARTITION BY query_id
-               ORDER BY round(list_cosine_similarity(qv, cv), 6) DESC, neighbor_id) AS rank
-      FROM cand)
-    WHERE rank <= {k}
-    """
-
-
-_ORACLES["ann_srp_lsh_topk"] = _srp_oracle_sql()
-
-
-@_q(
-    "ann_centroid_topk",
-    """
-    WITH c AS (
-      SELECT label, i, avg(embedding[i]::DOUBLE) AS cx
-      FROM embeddings, generate_series(1, 64) AS g(i)
-      GROUP BY label, i
-    ), cent AS (
-      SELECT label, list(cx ORDER BY i) AS centroid FROM c GROUP BY label
-    )
-    SELECT label, vec_id, CAST(rank AS INT) AS rank FROM (
-      SELECT e.label, e.vec_id,
-             row_number() OVER (PARTITION BY e.label
-               ORDER BY round(list_cosine_similarity(e.embedding::DOUBLE[], cent.centroid), 6) DESC,
-                        e.vec_id) AS rank
-      FROM embeddings e JOIN cent ON e.label = cent.label)
-    WHERE rank <= 3
-    """,
-)
-def _annc(spark, sf):
-    """IVF-style per-label centroid + top-3 closest members."""
-    from metadata_reconciliation_tool_spark.operators.similarity_search import (
-        centroid_topk_per_label,
-    )
-
-    return centroid_topk_per_label(_t(spark, sf, "embeddings"), k=3).select(
-        "label", "vec_id", "rank"
-    )
-
-
-# ---- rows-only / recursive-oracle entries ---------------------------------------
+# ---- flagship SQL twin -----------------------------------------------------------
 # NOTE (round-3 verdict item 4): the rows-only `recon_best_matches` registry
 # entry (the pandas-UDF flagship, not SQL-expressible → a permanent `err:
 # no_oracle` row in every CORRECTNESS file) is RETIRED. The kernel path
@@ -1603,306 +1124,6 @@ def _recon_sql(spark, sf):
             F.col("score").alias("best_score"),
         )
     )
-
-
-@_q(
-    "dedup_document_clusters",
-    "WITH RECURSIVE "
-    + _minhash_edges_cte(0.8)
-    + """, sym AS (
-      SELECT CAST(left_id AS VARCHAR) AS a, CAST(right_id AS VARCHAR) AS b FROM edges
-      UNION
-      SELECT CAST(right_id AS VARCHAR), CAST(left_id AS VARCHAR) FROM edges
-    ), reach(a, b) AS (
-      -- transitive closure; UNION (distinct) terminates the recursion.
-      -- Oracle-scale only (closure is Σ|component|² pairs — fine at sf0.01;
-      -- the Spark side uses O(log d)-round star contraction instead)
-      SELECT CAST(doc_id AS VARCHAR), CAST(doc_id AS VARCHAR) FROM documents
-      UNION
-      SELECT r.a, s.b FROM reach r JOIN sym s ON r.b = s.a
-    ), comp AS (
-      SELECT a AS doc_id, min(b) AS cluster_id FROM reach GROUP BY a
-    ), sizes AS (
-      SELECT cluster_id, count(*) AS cluster_size FROM comp GROUP BY cluster_id
-    )
-    SELECT comp.doc_id, comp.cluster_id, sizes.cluster_size
-    FROM comp JOIN sizes USING (cluster_id)
-    """,
-)
-def _ddc(spark, sf):
-    """Document near-dup CLUSTERS: MinHash-LSH pairs → the same
-    large-star/small-star connected components used for entity clustering
-    (J7 machinery reused on documents) → cluster id + size per doc.
-    Cluster id = lexicographic min member key, so the iterative CC is
-    SQL-twinnable as a recursive-CTE transitive closure + min-over-reachable
-    (exact at oracle scale); the CC operator is additionally pytest-oracled
-    against a union-find."""
-    from metadata_reconciliation_tool_spark.operators.clustering import (
-        assign_clusters,
-        connected_components,
-    )
-    from metadata_reconciliation_tool_spark.operators.dedup import minhash_lsh_pairs
-
-    docs = _t(spark, sf, "documents")
-    pairs = minhash_lsh_pairs(docs, jaccard_threshold=0.8)
-    edges = pairs.select(
-        F.col("left_id").cast("string").alias("left_key"),
-        F.col("right_id").cast("string").alias("right_key"),
-    )
-    comps = connected_components(edges)
-    assigned = assign_clusters(
-        docs.select(F.col("doc_id").cast("string").alias("entity_key")), comps
-    )
-    sizes = assigned.groupBy("cluster_id").agg(F.count("*").alias("cluster_size"))
-    return assigned.join(sizes, "cluster_id").select(
-        F.col("entity_key").alias("doc_id"), "cluster_id", "cluster_size"
-    )
-
-
-# NOTE (round 4, registry sized to the driver's 50-row CORRECTNESS cap):
-# the stub-plumbing queries `multimodal_features` (sha256-derived fake
-# features; hash-green in CORRECTNESS_r02/r03) and `multimodal_frame_sample`
-# (frame-index explosion over stub byte counts) were RETIRED from the
-# registry — their Arrow-plumbing role is superseded by the three real-codec
-# round-trips (wav/bmp/y4m below; y4m emits one row per genuinely decoded
-# frame, i.e. real frame sampling), and their functions remain value-checked
-# in tests/test_dedup_ann.py against locally recomputed sha256/byte-count
-# oracles.
-
-
-@_q(
-    "multimodal_wav_features",
-    """
-    WITH ids AS (
-      SELECT CAST(i AS BIGINT) AS media_id, 800 + (i % 5) * 160 AS n
-      FROM generate_series(0, 63) g(i)
-    ), samp AS (
-      SELECT media_id, UNNEST(generate_series(0, n - 1)) AS j FROM ids
-    ), vals AS (
-      SELECT media_id, j, ((media_id * 31 + j * 7) % 2001) - 1000 AS x FROM samp
-    ), zc AS (
-      SELECT media_id, sum(CASE WHEN x * lag_x < 0 THEN 1 ELSE 0 END) AS zero_crossings
-      FROM (SELECT media_id, x, lag(x) OVER (PARTITION BY media_id ORDER BY j) AS lag_x
-            FROM vals)
-      GROUP BY media_id
-    ), agg AS (
-      SELECT media_id, count(*) AS n_samples,
-             round(sqrt(sum(x * x) * 1.0 / count(*)), 4) AS rms,
-             max(abs(x)) AS peak
-      FROM vals GROUP BY media_id
-    )
-    SELECT a.media_id, CAST(1 AS INT) AS n_channels, CAST(8000 AS INT) AS sample_rate,
-           CAST(a.n_samples AS BIGINT) AS n_samples, CAST(a.rms AS DOUBLE) AS rms,
-           CAST(a.peak AS INT) AS peak, CAST(z.zero_crossings AS BIGINT) AS zero_crossings
-    FROM agg a JOIN zc z USING (media_id)
-    """,
-)
-def _mmw(spark, sf):
-    """REAL multimodal decode, hash-oracled: genuine RIFF/WAV payloads are
-    synthesized (stdlib wave+struct), decoded back (header parse + PCM16
-    stats) via mapInPandas, and the DuckDB twin recomputes the stats
-    analytically from the integer generating formula — if the encoder or
-    decoder were wrong, the round-trip would not match."""
-    from metadata_reconciliation_tool_spark.operators.multimodal import (
-        decode_wav_features,
-        gen_wav_media,
-    )
-
-    out = decode_wav_features(gen_wav_media(spark, 64))
-    return out.withColumn("rms", F.round("rms", 4))
-
-
-@_q(
-    "multimodal_bmp_features",
-    """
-    WITH ids AS (
-      SELECT CAST(i AS BIGINT) AS media_id,
-             7 + (i % 3) * 3 AS w, 6 + (i % 2) * 2 AS h
-      FROM generate_series(0, 63) g(i)
-    ), px AS (
-      SELECT media_id, w, h, UNNEST(generate_series(0, w * h - 1)) AS p FROM ids
-    ), chan AS (
-      SELECT media_id, w, h, p % w AS x, p // w AS y FROM px
-    ), vals AS (
-      SELECT media_id, w, h,
-             (media_id * 31 + y * 17 + x * 7 + 0) % 256 AS b,
-             (media_id * 31 + y * 17 + x * 7 + 5) % 256 AS g,
-             (media_id * 31 + y * 17 + x * 7 + 10) % 256 AS r
-      FROM chan
-    )
-    SELECT media_id, CAST(w AS INT) AS width, CAST(h AS INT) AS height,
-           CAST(54 + ((w * 3 + 3) // 4) * 4 * h AS INT) AS n_bytes,
-           CAST(round(sum(b) * 1.0 / count(*), 6) AS DOUBLE) AS mean_b,
-           CAST(round(sum(g) * 1.0 / count(*), 6) AS DOUBLE) AS mean_g,
-           CAST(round(sum(r) * 1.0 / count(*), 6) AS DOUBLE) AS mean_r,
-           CAST(greatest(max(b), max(g), max(r)) AS INT) AS peak
-    FROM vals GROUP BY media_id, w, h
-    """,
-)
-def _mmb(spark, sf):
-    """REAL image decode, hash-oracled (round-2 verdict item 8 — the WAV
-    pattern replicated for the image kind): genuine bottom-up 24-bit BMP
-    payloads are synthesized (stdlib struct), decoded back (header parse +
-    padded BGR row read + channel stats) via mapInPandas, and the DuckDB
-    twin recomputes width/height/file size/channel means/peak analytically
-    from the integer pixel formula — an encode→decode→aggregate round-trip
-    value check."""
-    from metadata_reconciliation_tool_spark.operators.multimodal import (
-        decode_bmp_features,
-        gen_bmp_media,
-    )
-
-    out = decode_bmp_features(gen_bmp_media(spark, 64))
-    return out.select(
-        "media_id",
-        "width",
-        "height",
-        "n_bytes",
-        F.round("mean_b", 6).alias("mean_b"),
-        F.round("mean_g", 6).alias("mean_g"),
-        F.round("mean_r", 6).alias("mean_r"),
-        "peak",
-    )
-
-
-@_q(
-    "multimodal_y4m_features",
-    """
-    WITH ids AS (
-      SELECT CAST(i AS BIGINT) AS media_id,
-             6 + (i % 3) * 2 AS w, 4 + (i % 2) * 2 AS h,
-             2 + (i % 3) AS nf
-      FROM generate_series(0, 63) g(i)
-    ), pos AS (
-      SELECT media_id, w, h, nf,
-             UNNEST(generate_series(0, nf * w * h - 1)) AS p
-      FROM ids
-    ), vals AS (
-      SELECT media_id, w, h, p // (w * h) AS f,
-             (media_id * 31 + (p // (w * h)) * 19 + 0
-              + ((p % (w * h)) // w) * 5 + (p % w) * 3) % 256 AS vy,
-             (media_id * 31 + (p // (w * h)) * 19 + 11
-              + ((p % (w * h)) // w) * 5 + (p % w) * 3) % 256 AS vcb,
-             (media_id * 31 + (p // (w * h)) * 19 + 22
-              + ((p % (w * h)) // w) * 5 + (p % w) * 3) % 256 AS vcr
-      FROM pos
-    )
-    SELECT media_id, CAST(f AS INT) AS frame_idx,
-           CAST(w AS INT) AS width, CAST(h AS INT) AS height,
-           CAST(round(sum(vy) * 1.0 / count(*), 6) AS DOUBLE) AS mean_y,
-           CAST(round(sum(vcb) * 1.0 / count(*), 6) AS DOUBLE) AS mean_cb,
-           CAST(round(sum(vcr) * 1.0 / count(*), 6) AS DOUBLE) AS mean_cr,
-           CAST(greatest(max(vy), max(vcb), max(vcr)) AS INT) AS peak
-    FROM vals GROUP BY media_id, f, w, h
-    """,
-)
-def _mmy(spark, sf):
-    """REAL video decode, hash-oracled (round-3 verdict item 5 — the
-    WAV→BMP pattern completed for the video kind): genuine YUV4MPEG2
-    streams (plain-text stream header + raw C444 planar frames, pure
-    stdlib) are synthesized, decoded back frame by frame via mapInPandas —
-    one output row per decoded frame, i.e. REAL frame sampling — and the
-    DuckDB twin recomputes per-frame plane means/peak analytically from the
-    integer sample formula: an encode→decode→aggregate round-trip value
-    check."""
-    from metadata_reconciliation_tool_spark.operators.multimodal import (
-        decode_y4m_frames,
-        gen_y4m_media,
-    )
-
-    out = decode_y4m_frames(gen_y4m_media(spark, 64))
-    return out.select(
-        "media_id",
-        "frame_idx",
-        "width",
-        "height",
-        F.round("mean_y", 6).alias("mean_y"),
-        F.round("mean_cb", 6).alias("mean_cb"),
-        F.round("mean_cr", 6).alias("mean_cr"),
-        "peak",
-    )
-
-
-@_q(
-    "dedup_simhash",
-    None,  # assembled below — programmatically generated 64-bit SQL twin
-)
-def _dsh(spark, sf):
-    """64-bit SimHash near-dup pairs, 4×16-bit quarter-block candidate
-    generation (pigeonhole-exact for Hamming ≤ 3), Hamming ≤ 3 verify."""
-    from metadata_reconciliation_tool_spark.operators.dedup import simhash_dedup_pairs
-
-    return simhash_dedup_pairs(_t(spark, sf, "documents")).select(
-        "left_id", "right_id", F.col("hamming").cast("int").alias("hamming")
-    )
-
-
-def _simhash_oracle_sql() -> str:
-    """Generate the DuckDB twin of the 64-bit simhash_bitstring +
-    quarter-block pairing. Bit j of the simhash tests bit (8>>((j-1)%4)) of
-    hex nibble (j-1)//4+1 of md5(token) via an 8-char IN-list — identical to
-    the Spark Column expression. Empty tokens are filtered (x <> '') to
-    match ws_tokens' array_remove parity on empty/whitespace-only text."""
-    from metadata_reconciliation_tool_spark.functions.textstats import (
-        NIBBLE_BIT_CHARS,
-        SIMHASH_BIT_LAYOUT,
-        SIMHASH_BITS,
-    )
-
-    def inlist(bitval: int) -> str:
-        return "(" + ",".join(f"'{c}'" for c in NIBBLE_BIT_CHARS[bitval]) + ")"
-
-    bit_terms = " || ".join(
-        f"(CASE WHEN len(h) > 0 AND 2 * len(list_filter(h, x -> substring(x, {pos}, 1) IN {inlist(bitval)})) >= len(h) "
-        f"THEN '1' ELSE '0' END)"
-        for pos, bitval in SIMHASH_BIT_LAYOUT
-    )
-    ham_terms = " + ".join(
-        f"(CASE WHEN substring(lsh, {i}, 1) <> substring(rsh, {i}, 1) THEN 1 ELSE 0 END)"
-        for i in range(1, SIMHASH_BITS + 1)
-    )
-    quarters = "\n      UNION ALL\n".join(
-        f"      SELECT doc_id, sh, '{part}:' || substring(sh, {part * 16 + 1}, 16) AS bk FROM s"
-        for part in range(4)
-    )
-    cap = 1000  # operators/dedup.py:simhash_dedup_pairs max_block_size default
-    return f"""
-    WITH t AS (
-      SELECT doc_id, list_transform(
-               list_filter(regexp_split_to_array(trim(lower(text)), '\\s+'), x -> x <> ''),
-               x -> md5(x)) AS h
-      FROM documents
-    ), s AS (
-      SELECT doc_id, {bit_terms} AS sh FROM t
-    ), quarters AS (
-{quarters}
-    ), bsz AS (
-      SELECT bk, count(*) AS block_n FROM quarters GROUP BY bk
-    ), qsmall AS (
-      SELECT q.doc_id, q.sh, q.bk FROM quarters q JOIN bsz ON q.bk = bsz.bk
-      WHERE bsz.block_n <= {cap}
-    ), qbig AS (
-      SELECT q.doc_id, q.sh, q.bk FROM quarters q JOIN bsz ON q.bk = bsz.bk
-      WHERE bsz.block_n > {cap}
-    ), reps AS (
-      SELECT bk, min(doc_id) AS rep_id, min_by(sh, doc_id) AS rep_sh
-      FROM qbig GROUP BY bk
-    ), cand AS (
-      SELECT DISTINCT left_id, right_id, lsh, rsh FROM (
-        SELECT a.doc_id AS left_id, b.doc_id AS right_id, a.sh AS lsh, b.sh AS rsh
-        FROM qsmall a JOIN qsmall b ON a.bk = b.bk AND a.doc_id < b.doc_id
-        UNION ALL
-        SELECT r.rep_id, b.doc_id, r.rep_sh, b.sh
-        FROM qbig b JOIN reps r ON b.bk = r.bk WHERE b.doc_id <> r.rep_id
-      )
-    )
-    SELECT left_id, right_id, CAST(ham AS INT) AS hamming FROM (
-      SELECT left_id, right_id, ({ham_terms}) AS ham FROM cand
-    ) WHERE ham <= 3
-    """
-
-
-_ORACLES["dedup_simhash"] = _simhash_oracle_sql()
 
 
 # ---------------------------------------------------------------------------

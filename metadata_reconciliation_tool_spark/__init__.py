@@ -10,19 +10,20 @@ Architecture (Spark-first, NOT a port):
                  pairs, scores, clusters, metrics)
 - ``fixtures``   deterministic synthetic transcripts / reference dictionary /
                  labeled pairs / expected clusters (seeded, no wall clock)
-- ``functions``  scalar layer: normalization, similarity batteries
-                 (Jaro-Winkler, token-set Levenshtein, double-metaphone,
-                 MinHash) as vectorized pandas UDFs, confidence formulas as
-                 pure Column expressions, text statistics
+- ``functions``  scalar layer: normalization, similarity kernels
+                 (Jaro-Winkler, token-aligned names, metaphone, MinHash)
+                 behind one Arrow scoring UDF and the blocking-key UDFs,
+                 confidence formulas as pure Column expressions
 - ``operators``  dataflow layer: extraction, multi-pass blocking,
                  pair scoring, ranking/top-k, iterative connected-components
-                 clustering, dedup suite, similarity search, multimodal
-                 plumbing
+                 clustering; off the pipeline path, record dedup and exact
+                 cosine top-k
 - ``sources``    readers (parquet / flexible CSV / Iceberg-if-available) and
                  writers (stage checkpoints, CSV/JSON exports)
 - ``plans``      pipeline orchestration with idempotent checkpoint/resume and
                  per-stage lineage + metrics tables
-- ``streaming``  Structured Streaming variant of the events rollup
+- ``streaming``  Structured Streaming micro-batch ingest into the
+                 incremental reconciler
 
 The reference is a single-process Flask/Celery/SQLite app that loops over
 pandas rows and calls external authority HTTP APIs per entity

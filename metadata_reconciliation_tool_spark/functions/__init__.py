@@ -1,4 +1,3 @@
-"""Scalar function layer: normalization, similarity batteries, confidence
-formulas, text statistics. Pure Column expressions wherever Catalyst can
-express the semantics; Arrow-batched pandas UDFs for the rest. No per-row
-Python anywhere."""
+"""Scalar function layer: normalization, similarity kernels, confidence
+formulas. Pure Column expressions wherever Catalyst can express the
+semantics; Arrow-batched UDFs for the rest. No per-row Python anywhere."""

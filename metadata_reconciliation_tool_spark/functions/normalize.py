@@ -96,11 +96,12 @@ def nfkc_fold(s: pd.Series) -> pd.Series:
 
 
 def normalize_name_unicode(col: Column) -> Column:
-    """NFKC fold (pandas UDF, only where non-ASCII present) + Column cleanup.
+    """NFKC fold of non-ASCII names (pandas UDF) + Column cleanup.
 
-    The `when` keeps ~all ASCII rows on the pure-JVM path; the UDF fires
-    only on the non-ASCII minority — at 100 TB that is the difference
-    between a cheap scan and an Arrow round-trip of every row.
+    The `when` only chooses which value is output: ASCII rows keep the
+    input. It does not gate the UDF — Spark evaluates a Python UDF over
+    every input row (``explain()`` shows ``ArrowEvalPython [nfkc_fold]`` on
+    the whole column), so every row crosses to Python and back.
     """
     folded = F.when(col.rlike(r"[^\x00-\x7F]"), nfkc_fold(col)).otherwise(col)
     return normalize_name_expr(folded)

@@ -257,11 +257,11 @@ def make_na_upper_bound_vectorized():
         factorize path above is the same codes/uniques by construction."""
         n = len(codes1)
         out = np.zeros(n, dtype=np.float64)  # zero-token rows stay 0.0
-        map1 = np.fromiter((info_id(u) for u in uniq1), np.int64, len(uniq1))
-        map2 = np.fromiter((info_id(u) for u in uniq2), np.int64, len(uniq2))
-        empty_id = info_id("")  # encode sentinels (<0) are None names
-        ia = np.where(codes1 >= 0, map1[codes1], empty_id)
-        ib = np.where(codes2 >= 0, map2[codes2], empty_id)
+        # the encoders' null sentinel is code -1: a trailing "" entry maps it
+        # to the empty name, also when every name of the batch is null
+        map1 = np.fromiter(map(info_id, [*uniq1, ""]), np.int64, len(uniq1) + 1)
+        map2 = np.fromiter(map(info_id, [*uniq2, ""]), np.int64, len(uniq2) + 1)
+        ia, ib = map1[codes1], map2[codes2]
         # scalar-fallback rows need the actual strings back (bounded: only
         # rows whose structure the dense path cannot represent)
         def name_at(codes, uniq, k):

@@ -1,8 +1,9 @@
-"""Similarity batteries as vectorized pandas UDFs.
+"""Similarity kernels and the Arrow-batched UDFs that run them.
 
 The reference scores per-row inside ``iterrows()`` loops with plain-Python
-tier formulas (SURVEY.md §2.10). Here every battery operates on whole Arrow
-batches (pd.Series in, pd.Series out). The pure-Python kernels below are
+tier formulas (SURVEY.md §2.10). Here every UDF operates on whole Arrow
+batches; the scalar ``*_py`` functions are the specifications they are
+pinned against. The pure-Python kernels below are
 original implementations written for this engine from the published
 algorithm definitions (Jaro 1989 / Winkler 1990; Wagner–Fischer DP;
 Philips' Metaphone family; Broder MinHash) — NOT ports of any reference
@@ -25,6 +26,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .normalize import TITLE_WORDS
 
 # --------------------------------------------------------------------------
 # Jaro-Winkler (standard definition; winkler prefix scaling p=0.1, max l=4)
@@ -238,18 +241,6 @@ def metaphone_py(word: str, max_len: int = 6) -> str:
     return "".join(out[:max_len])
 
 
-def double_metaphone_py(name: str) -> tuple[str, str]:
-    """Primary + secondary phonetic codes for a full (multi-token) name.
-
-    Primary: metaphone of each token joined. Secondary: a looser variant
-    with vowel-free folding so near-spellings still collide.
-    """
-    toks = name.lower().split()
-    primary = " ".join(metaphone_py(t) for t in toks)
-    secondary = " ".join(metaphone_py(t, max_len=4) for t in toks)
-    return primary, secondary
-
-
 # --------------------------------------------------------------------------
 # MinHash (Broder) over character shingles — deterministic, numpy-vectorized
 # --------------------------------------------------------------------------
@@ -299,7 +290,7 @@ def lsh_band_keys_py(
 
 
 # --------------------------------------------------------------------------
-# pandas UDF wrappers (Arrow-batched; the only JVM↔Python crossings)
+# Arrow-batched UDFs (the only JVM↔Python crossings)
 # --------------------------------------------------------------------------
 
 
@@ -310,43 +301,11 @@ def jaro_winkler_udf(s1: pd.Series, s2: pd.Series) -> pd.Series:
     )
 
 
-@F.pandas_udf(T.DoubleType())
-def token_lev_ratio_udf(s1: pd.Series, s2: pd.Series) -> pd.Series:
-    """Token-set Levenshtein: sort tokens, join, Levenshtein ratio — order
-    insensitive, typo tolerant."""
-    def one(a: str, b: str) -> float:
-        a = " ".join(sorted((a or "").split()))
-        b = " ".join(sorted((b or "").split()))
-        return lev_ratio_py(a, b)
-
-    return pd.Series([one(a, b) for a, b in zip(s1, s2)], dtype="float64")
-
-
-@F.pandas_udf(T.StringType())
-def metaphone_udf(s: pd.Series) -> pd.Series:
-    return s.map(lambda x: double_metaphone_py(x)[0] if x else "")
-
-
 # LSH layout: 16 bands × 2 rows. For short names the shingle-set Jaccard of
 # a 1-char typo sits around 0.7; P(≥1 band collides) = 1-(1-J²)^16 ≈ 0.9999
 # at J=0.7 vs ≈0.95 with 8×4 bands. The extra spurious candidates are scored
 # and rejected — recall is the scarce resource, precision comes from scoring.
 LSH_NUM_PERM, LSH_BANDS, LSH_ROWS = 32, 16, 2
-
-
-@F.pandas_udf(T.ArrayType(T.StringType()))
-def lsh_keys_udf(s: pd.Series) -> pd.Series:
-    """norm_name → LSH band bucket keys (module constants above)."""
-    num_perm, bands, rows = LSH_NUM_PERM, LSH_BANDS, LSH_ROWS
-    a, b = _minhash_params(num_perm)
-
-    def one(text: str) -> list[str]:
-        if not text:
-            return []
-        sig = minhash_signature_py(text, num_perm, a, b)
-        return lsh_band_keys_py(sig, bands, rows)
-
-    return s.map(one)
 
 
 _LSH_KEYS_SIGS_SCHEMA = T.StructType(
@@ -361,12 +320,12 @@ _LSH_KEYS_SIGS_SCHEMA = T.StructType(
 def lsh_keys_sigs_udf(s: pd.Series) -> pd.DataFrame:
     """norm_name → (band keys, band signatures) in ONE minhash pass.
 
-    ``keys`` is exactly :func:`lsh_keys_udf` (parity-pinned). ``sigs[i]``
+    ``keys`` is exactly :func:`lsh_keys_py` (parity-pinned). ``sigs[i]``
     is band i's md5 first-8-bytes as a signed int64 — a BIJECTION of the
     16-hex-char hash embedded in ``keys[i]`` (same bytes), so for two
     names of the same entity type: keys[i] equal ⟺ sigs[i] equal, with
     no collision risk. Blocking's local winner filter compares the 8-byte
-    longs instead of ~25-char typed key strings (round 6)."""
+    longs instead of ~25-char typed key strings."""
     import hashlib as _hashlib
     import struct as _struct
 
@@ -395,7 +354,7 @@ def lsh_keys_sigs_udf(s: pd.Series) -> pd.DataFrame:
     return pd.DataFrame({"keys": keys_out, "sigs": sigs_out})
 
 
-_TITLES = {"mr", "mrs", "ms", "dr", "prof", "sir", "dame"}
+_TITLES = set(TITLE_WORDS)
 
 
 def name_align_py(a: str, b: str) -> float:
@@ -459,45 +418,6 @@ def name_align_py(a: str, b: str) -> float:
     return mean * factor * max(0.0, 1.0 - 0.1 * extra)
 
 
-@F.pandas_udf(T.DoubleType())
-def name_align_udf(s1: pd.Series, s2: pd.Series) -> pd.Series:
-    return pd.Series(
-        [name_align_py(a, b) for a, b in zip(s1, s2)], dtype="float64"
-    )
-
-
-@F.pandas_udf(
-    T.StructType(
-        [
-            T.StructField("jaro_winkler", T.DoubleType()),
-            T.StructField("name_align", T.DoubleType()),
-        ]
-    )
-)
-def batteries_udf(s1: pd.Series, s2: pd.Series) -> pd.DataFrame:
-    """Fused python batteries: ONE Arrow round-trip per batch computes both
-    whole-string Jaro-Winkler and token-aligned similarity. Keeping a single
-    pandas UDF in the scoring projection matters at scale: each extra UDF is
-    another JVM↔Python transfer of every pair, and in local mode another
-    oversubscribed Python worker per core. (Token-set Levenshtein moved to
-    the JVM built-in `levenshtein` — see operators/scoring.py.)"""
-    n = len(s1)
-    jw = [1.0] * n
-    al = [1.0] * n
-    for i, (a, b) in enumerate(zip(s1, s2)):
-        if a == b and a and any(t not in _TITLES for t in a.split()):
-            # identical strings with ≥1 non-title token: both kernels return
-            # exactly 1.0 (pinned by test) — skip them. Exact-duplicate
-            # mentions are a meaningful share of blocked pairs, and this is
-            # the hot path. Title-only ('dr'↔'dr') and whitespace-only
-            # identical strings fall through: name_align_py strips titles
-            # first and returns 0.0 for them, not 1.0.
-            continue
-        jw[i] = jaro_winkler_py(a or "", b or "")
-        al[i] = name_align_py(a, b)
-    return pd.DataFrame({"jaro_winkler": jw, "name_align": al})
-
-
 _SCORING_BATTERIES_SCHEMA = T.StructType(
     [
         T.StructField("jaro_winkler", T.DoubleType()),
@@ -508,100 +428,36 @@ _SCORING_BATTERIES_SCHEMA = T.StructType(
 )
 
 
-def make_scoring_batteries_udf(cutoff: float):
-    """batteries_udf with the scoring prefilter fused in (round-2 verdict
-    item 1): per pair, first the ~7 µs sound upper bound on name_align
-    (functions/prefilter.py) — combined with the JVM-computed exact
-    composite components passed in as columns (token-Levenshtein ratio, F7
-    confidence, source boost) exactly as the JVM combines them — and only
-    when the bounded composite could still reach ``cutoff`` do the ~34 µs
-    Jaro-Winkler/alignment kernels run. Pruned rows return
-    (null, null, bound, true); exact rows (null bound) are bit-identical to
-    batteries_udf. The prune comparison replicates the JVM score expression
-    IEEE-op-for-op (0.55·na + 0.25·tlr + 0.20·wc, then min(score+boost, 1))
-    so `pruned` implies the emitted score column is < cutoff.
+def make_scoring_batteries_arrow_udf(cutoff: float):
+    """The scoring UDF: Jaro-Winkler and token-aligned similarity of each
+    blocked pair, with the scoring prefilter fused in.
+
+    Per pair, the sound upper bound on ``name_align`` (functions/prefilter.py)
+    is combined with the JVM-computed exact composite components passed in
+    as columns (token-Levenshtein ratio, F7 confidence, source boost) exactly
+    as the JVM combines them; only when the bounded composite could still
+    reach ``cutoff`` do the Jaro-Winkler/alignment kernels run. Pruned rows
+    return (null, null, bound, true); kept rows return the kernels
+    (``jaro_winkler_py``, ``name_align_py``) with a null bound. The prune
+    comparison replicates the JVM score expression IEEE-op-for-op
+    (0.55·na + 0.25·tlr + 0.20·wc, then min(score+boost, 1)), so ``pruned``
+    implies the emitted score is < cutoff. Equal-name pairs never prune (the
+    JVM's exact-equality branch scores them 1.0 regardless of the kernels);
+    null names compare equal iff both are null, like Python ``None == None``.
+    Identical names with a non-title token skip the kernels: both return
+    exactly 1.0 for them. Title-only and blank identical names fall through,
+    since ``name_align_py`` strips titles and returns 0.0.
+
+    The name columns never materialize as per-row Python strings.
+    ``pyarrow.compute.dictionary_encode`` (C++) maps each batch's names to
+    (codes, uniques); only the unique names become Python strings, the bound
+    evaluates over the codes (``prefilter.evaluate_encoded``), the kernels
+    rebuild strings from the unique lists for surviving rows only, and the
+    outputs return as numpy-backed Arrow arrays with explicit null masks.
 
     ``cutoff`` is baked into the UDF closure (a factory, not a column): at
-    34M pairs a lit column is 274 MB of constant doubles through Arrow."""
-    from .prefilter import get_na_upper_bound_evaluator
-
-    # cutoff <= 0 (prefilter disabled) can never prune: skip the bound
-    # entirely so the disabled mode is genuinely the plain kernel path
-    can_prune = cutoff > 0.0
-
-    def fn(
-        s1: pd.Series, s2: pd.Series, tlr: pd.Series, wc: pd.Series,
-        boost: pd.Series,
-    ) -> pd.DataFrame:
-        n = len(s1)
-        names1 = s1.tolist()
-        names2 = s2.tolist()
-        tlr_v = tlr.to_numpy(dtype="float64", na_value=float("nan"))
-        wc_v = wc.to_numpy(dtype="float64", na_value=float("nan"))
-        boost_v = boost.to_numpy(dtype="float64", na_value=0.0)
-        # float64/bool numpy outputs with NaN-as-null (round 6): the former
-        # object lists holding None made the return-path Arrow conversion
-        # walk 34M python objects per column; pandas→Arrow maps float NaN
-        # to null, and no kernel/bound value is ever a genuine NaN, so the
-        # emitted rows are identical
-        jw = np.ones(n, dtype=np.float64)
-        al = np.ones(n, dtype=np.float64)
-        ub = np.full(n, np.nan, dtype=np.float64)
-        pruned = np.zeros(n, dtype=bool)
-        if can_prune and n:
-            # the whole batch's bounds in one vectorized sweep (prefilter.py
-            # — bit-identical to na_upper_bound_py, parity-fuzzed; the
-            # worker-cached evaluator reuses name/token memos across
-            # batches, reset at a bounded size).
-            # a == b rows are excluded exactly as before: the JVM
-            # composite's exact-equality branch scores them 1.0 regardless
-            # of the kernels, so they must never prune.
-            need = [i for i in range(n) if names1[i] != names2[i]]
-            if need:
-                bounds = get_na_upper_bound_evaluator()(
-                    [names1[i] for i in need], [names2[i] for i in need]
-                )
-                idx = np.asarray(need, dtype=np.int64)
-                # same IEEE op order as the JVM composite expression
-                blend = 0.55 * bounds + 0.25 * tlr_v[idx] + 0.2 * wc_v[idx]
-                prn = np.minimum(blend + boost_v[idx], 1.0) < cutoff
-                hit = idx[prn]
-                jw[hit] = np.nan
-                al[hit] = np.nan
-                ub[hit] = bounds[prn]
-                pruned[hit] = True
-        for i in np.flatnonzero(~pruned).tolist():
-            a, b = names1[i], names2[i]
-            if a == b and a and any(t not in _TITLES for t in a.split()):
-                continue  # identical, non-title token: exact (1.0, 1.0)
-            jw[i] = jaro_winkler_py(a or "", b or "")
-            al[i] = name_align_py(a, b)
-        return pd.DataFrame(
-            {"jaro_winkler": jw, "name_align": al, "na_ub": ub, "pruned": pruned}
-        )
-
-    return F.pandas_udf(fn, _SCORING_BATTERIES_SCHEMA)
-
-
-def make_scoring_batteries_arrow_udf(cutoff: float):
-    """Arrow-native twin of :func:`make_scoring_batteries_udf` (round 6,
-    guide §4.1/§4.2): the same fused bound+kernels, but the 34M-pair name
-    columns never materialize as per-row Python strings. ``pyarrow.compute
-    .dictionary_encode`` (C++) maps each batch's names to (codes, uniques);
-    only the UNIQUE names become Python strings (for the worker-cached
-    structure memo), the bound evaluates over the codes
-    (prefilter.evaluate_encoded), and the outputs return as numpy-backed
-    Arrow arrays with explicit null masks — no pandas object columns on
-    either side of the boundary. Values are identical to the pandas twin
-    (parity-pinned in tests/test_prefilter.py):
-
-    - the prune rule evaluates the bound for EVERY non-equal pair exactly
-      as before; equal-name pairs are excluded from pruning by the same
-      ``ls != rs`` rule, computed as an Arrow kernel (null names compare
-      equal iff both null — Python ``None != None`` is False);
-    - the kernels run per surviving row with strings rebuilt from the
-      unique lists (only ~3.5% of rows, exactly the rows the pandas twin
-      materializes anyway).
+    34M pairs a lit column is 274 MB of constant doubles through Arrow. A
+    cutoff <= 0 disables the prefilter and never prunes.
     """
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -616,10 +472,11 @@ def make_scoring_batteries_arrow_udf(cutoff: float):
         return codes.astype(np.int64, copy=False), enc.dictionary.to_pylist()
 
     def fn(s1, s2, tlr, wc, boost):
-        if isinstance(s1, pa.ChunkedArray):  # defensive: combine per-batch
-            s1, s2, tlr, wc, boost = (
-                x.combine_chunks() for x in (s1, s2, tlr, wc, boost)
-            )
+        # each argument on its own: any one of them may arrive chunked
+        s1, s2, tlr, wc, boost = (
+            x.combine_chunks() if isinstance(x, pa.ChunkedArray) else x
+            for x in (s1, s2, tlr, wc, boost)
+        )
         n = len(s1)
         codes1, uniq1 = _codes_uniq(s1)
         codes2, uniq2 = _codes_uniq(s2)
@@ -704,7 +561,8 @@ def surname_key_udf(s: pd.Series) -> pd.Series:
 
 
 def lsh_keys_py(text: str) -> list[str]:
-    """Python twin of :func:`lsh_keys_udf` (same params/seed — parity-pinned)."""
+    """Spec of :func:`lsh_keys_sigs_udf`'s ``keys`` (same params/seed —
+    parity-pinned)."""
     if not text:
         return []
     a, b = _minhash_params(LSH_NUM_PERM)
@@ -717,8 +575,6 @@ def initials_subset_udf(s1: pd.Series, s2: pd.Series) -> pd.Series:
     """U4 names_are_similar (data_sources.py:294-310) extended for initials:
     token sets match if one side's tokens are a subset of the other's, where
     a single-letter token matches any token sharing its first letter."""
-    titles = {"mr", "mrs", "ms", "dr", "prof", "sir", "dame"}
-
     def covers(small: list[str], big: list[str]) -> bool:
         used: set[int] = set()
         for t in small:
@@ -737,8 +593,8 @@ def initials_subset_udf(s1: pd.Series, s2: pd.Series) -> pd.Series:
         return True
 
     def one(a: str, b: str) -> bool:
-        ta = [t for t in (a or "").split() if t not in titles]
-        tb = [t for t in (b or "").split() if t not in titles]
+        ta = [t for t in (a or "").split() if t not in _TITLES]
+        tb = [t for t in (b or "").split() if t not in _TITLES]
         if not ta or not tb:
             return False
         return covers(ta, tb) if len(ta) <= len(tb) else covers(tb, ta)

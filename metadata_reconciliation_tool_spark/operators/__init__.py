@@ -1,3 +1,2 @@
-"""Dataflow operators: extraction, multi-pass blocking, pair scoring,
-ranking, iterative connected-components clustering, dedup suite, similarity
-search, multimodal plumbing."""
+"""Dataflow operators: extraction, multi-pass blocking, pair scoring, ranking,
+connected-components clustering; off-path record dedup and cosine top-k."""

@@ -264,6 +264,22 @@ def _pass_keys(
     )
 
 
+def pair_join_partitions(master: str, shuffle_partitions: int, parallelism: int) -> int:
+    """Partition count of the balanced entity side of the dictionary join.
+
+    In local mode, 2× the core count, floored at the session's shuffle
+    partitioning (measured): at exactly one task per core the pair-dense
+    join stage runs as ONE wave, so a single slowed core (shared-host
+    interference, a straggling task) delays the whole stage; two waves of
+    half-size tasks bound the damage to half a wave — median 27.7 → 22.2 s
+    across 11 interleaved reps at load 26–42, equal best-case on a quiet
+    host. On a cluster the count stays the session's shuffle partitioning,
+    which is sized for the cluster."""
+    if master.split("[")[0] == "local":
+        return max(shuffle_partitions, 2 * parallelism)
+    return shuffle_partitions
+
+
 def dictionary_candidates(
     entities_keyed: DataFrame,
     dictionary_keyed: DataFrame,
@@ -393,19 +409,11 @@ def dictionary_candidates(
         # per-batch incremental path skips it by design: batch pair
         # streams are seconds of work, below straggler-tail relevance.
         if entity_rows is not None and entity_rows <= REPARTITION_MAX_ENTITY_ROWS:
-            # 2× the core count, floored at the session's shuffle
-            # partitioning (round 6, measured): at exactly one task per
-            # core the pair-dense join stage runs as ONE wave, so a single
-            # slowed core (shared-host interference, a straggling task)
-            # delays the whole stage; two waves of half-size tasks bound
-            # the damage to half a wave — median 27.7 → 22.2 s across 11
-            # interleaved reps at load 26–42, equal best-case on a quiet
-            # host. On a cluster the shuffle.partitions floor dominates,
-            # so production behavior is unchanged.
             sc = e.sparkSession.sparkContext
-            nparts = max(
+            nparts = pair_join_partitions(
+                sc.master,
                 int(e.sparkSession.conf.get("spark.sql.shuffle.partitions")),
-                2 * sc.defaultParallelism,
+                sc.defaultParallelism,
             )
             e = e.repartition(nparts, "left_key")
         joined = e.join(F.broadcast(d), ["block_pass", "block_key"])

@@ -1,267 +1,35 @@
-"""Approximate-nearest-neighbor search over an embedding column
-(array<float>).
-
-- :func:`brute_force_topk` — exact cosine top-k via built-in array
-  expressions (zip_with dot product + window rank). The correctness
-  baseline; O(Q × N) — fine when the query side is small/broadcastable.
-- :func:`srp_lsh_topk` — the scale path: sign-random-projection LSH
-  buckets (deterministic seeded hyperplanes), candidates only within
-  matching buckets (multi-probe via several independent tables), exact
-  re-rank inside buckets. At 10^9 vectors this turns the cross product
-  into #tables × bucket-local joins.
-
-Determinism: ranking ties broken by neighbor id; hyperplanes derived from a
-fixed seed (never wall-clock).
-"""
+"""Exact cosine top-k over an embedding column (array<float>), with the
+cosine built from array expressions (zip_with + aggregate), no UDF. Ranking
+ties break by neighbor id, so results are deterministic."""
 
 from __future__ import annotations
 
-import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
 def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def _norm(c: Column) -> Column:
-    return F.sqrt(F.aggregate(c, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x))
+    prods = F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double"))
+    return F.aggregate(prods, F.lit(0.0), lambda acc, x: acc + x)
 
 
 def cosine(a: Column, b: Column) -> Column:
-    return _dot(a, b) / (_norm(a) * _norm(b))
+    return _dot(a, b) / (F.sqrt(_dot(a, a)) * F.sqrt(_dot(b, b)))
 
 
 def brute_force_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 5,
-    q_id: str = "vec_id",
-    q_vec: str = "embedding",
-    c_id: str = "vec_id",
-    c_vec: str = "embedding",
+    queries: DataFrame, corpus: DataFrame, k: int = 5,
+    id_col: str = "vec_id", vec_col: str = "embedding",
 ) -> DataFrame:
-    """Exact cosine top-k: broadcast the query side, rank per query.
+    """Broadcast the query side, rank the corpus per query by cosine.
     Returns (query_id, neighbor_id, cosine, rank); self-pairs excluded."""
-    q = F.broadcast(
-        queries.select(F.col(q_id).alias("query_id"), F.col(q_vec).alias("qv"))
-    )
-    c = corpus.select(F.col(c_id).alias("neighbor_id"), F.col(c_vec).alias("cv"))
+    q = F.broadcast(queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")))
+    c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"))
     scored = (
         q.crossJoin(c)
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .withColumn("cosine", cosine(F.col("qv"), F.col("cv")))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc(F.round("cosine", 6)), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
-
-
-def _srp_planes(dim: int, n_planes: int, table: int, seed: int = 42) -> np.ndarray:
-    rng = np.random.RandomState(seed + 1000 * table)
-    return rng.standard_normal((n_planes, dim))
-
-
-def srp_bucket(vec: Column, planes: np.ndarray) -> Column:
-    """Sign-random-projection bucket id: one bit per hyperplane, as a
-    bitstring. Pure Column exprs — the plane coefficients are literals."""
-    bits = []
-    for row in planes:
-        coeffs = F.array(*[F.lit(float(x)) for x in row])
-        d = _dot(vec, coeffs)
-        bits.append(F.when(d >= 0, F.lit("1")).otherwise(F.lit("0")))
-    return F.concat(*bits)
-
-
-def derive_n_planes(n_corpus: int, target_bucket_size: int = 256) -> int:
-    """Plane count scaled to the corpus: 2^planes buckets ≈ n / target.
-
-    A fixed plane count is a scale bug — 8 planes = 256 buckets forever, so
-    at 10^9 vectors each bucket holds ~4M vectors and the within-bucket
-    re-rank explodes. log₂ scaling keeps expected bucket population near
-    ``target_bucket_size`` at any corpus size (floor of 8 planes)."""
-    import math
-
-    ratio = max(n_corpus, 1) / max(target_bucket_size, 1)
-    return max(8, math.ceil(math.log2(ratio))) if ratio > 1 else 8
-
-
-def _cap_buckets(
-    ck: DataFrame, max_bucket_size: int, cap_salts: int
-) -> tuple[DataFrame, DataFrame]:
-    """Keep at most ``max_bucket_size`` corpus rows per (table, bucket) —
-    the LOWEST neighbor ids — without ever sorting a hot bucket's full
-    population in one task (round-3 verdict item 3: the former single
-    ``row_number`` window over every bucket made a 10⁷-identical-vector
-    bucket a one-task O(n log n) straggler — the exact shape
-    ``dedup._keep_min_id_per_key`` exists to avoid).
-
-    Three steps, all skew-safe:
-
-    1. bucket sizes via groupBy-count (map-side partial agg — a hot key
-       pre-reduces inside every map task); over-cap keys are RARE by
-       construction → broadcast;
-    2. under-cap buckets (the common path) pass through with NO window and
-       no sort at all — just a broadcast anti-join probe;
-    3. over-cap buckets run a salted two-stage lowest-k selection: stage 1
-       ranks within (bk, salt) — the hot bucket splits across
-       s = min(ceil(n/max_bucket_size), cap_salts) tasks of ~n/s rows —
-       and keeps each salt's lowest ``max_bucket_size`` ids; stage 2 ranks
-       the ≤ s·max_bucket_size survivors within bk. Any id among the
-       bucket's global lowest ``max_bucket_size`` has fewer than
-       ``max_bucket_size`` smaller ids in its own salt, so it survives
-       stage 1 — the final set is EXACTLY the global lowest ids (same
-       result, and the same SQL twin, as the old single window).
-
-    Hottest-task input is max(n/s, s·max_bucket_size) instead of n.
-    Returns (capped, dropped) with dropped = (bk, bucket_n, n_dropped)."""
-    sizes = ck.groupBy("bk").agg(F.count("*").alias("bucket_n"))
-    over = sizes.filter(F.col("bucket_n") > max_bucket_size)
-    dropped = over.withColumn(
-        "n_dropped", F.col("bucket_n") - max_bucket_size
-    ).select("bk", "bucket_n", "n_dropped")
-    cols = ck.columns
-    keep_all = ck.join(F.broadcast(over.select("bk")), "bk", "left_anti")
-    hot = ck.join(F.broadcast(over.select("bk", "bucket_n")), "bk")
-    n_salts = F.least(
-        F.ceil(F.col("bucket_n") / F.lit(max_bucket_size)), F.lit(cap_salts)
-    ).cast("int")
-    hot = hot.withColumn(
-        "_salt", F.pmod(F.xxhash64("neighbor_id"), n_salts).cast("int")
-    )
-    w1 = Window.partitionBy("bk", "_salt").orderBy(F.asc("neighbor_id"))
-    survivors = hot.withColumn("_rn", F.row_number().over(w1)).filter(
-        F.col("_rn") <= max_bucket_size
-    )
-    w2 = Window.partitionBy("bk").orderBy(F.asc("neighbor_id"))
-    hot_kept = (
-        survivors.withColumn("_rn2", F.row_number().over(w2))
-        .filter(F.col("_rn2") <= max_bucket_size)
-        .select(*cols)
-    )
-    return keep_all.select(*cols).unionByName(hot_kept), dropped
-
-
-def srp_lsh_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 5,
-    dim: int = 64,
-    n_planes: int | None = None,
-    n_tables: int = 4,
-    q_id: str = "vec_id",
-    q_vec: str = "embedding",
-    c_id: str = "vec_id",
-    c_vec: str = "embedding",
-    target_bucket_size: int = 256,
-    max_bucket_size: int = 1024,
-    cap_salts: int = 64,
-    return_dropped: bool = False,
-) -> DataFrame | tuple[DataFrame, DataFrame]:
-    """ANN top-k: union of n_tables SRP bucket joins, exact cosine re-rank
-    within candidates. Recall grows with n_tables (multi-probe); each table
-    is an equi-join on the bucket key — shuffle on the key only.
-
-    ``n_planes=None`` (default) derives the plane count from the corpus size
-    via :func:`derive_n_planes` (one count() on the corpus — O(1) result);
-    pass an explicit value to pin the bucket universe (tests, SQL twins).
-
-    **Hot-bucket cap** (round-2 verdict: every dedup operator had a
-    ``max_block_size`` contract; the ANN bucket join didn't — and a
-    duplicate-heavy corpus, the norm in training data, concentrates
-    identical vectors into one bucket where the join goes quadratic):
-    each (table, bucket) keeps at most ``max_bucket_size`` corpus rows —
-    the lowest neighbor ids, a deterministic and SQL-twinnable selection —
-    so per-query candidates are bounded by ``n_tables × max_bucket_size``.
-    Queries hashing into an over-cap bucket still re-rank against the
-    retained members; since hot buckets are hot precisely because their
-    members near-collide, the retained members are good neighbors (recall
-    floor is pytest-gated). The selection never sorts a hot bucket in one
-    task — see :func:`_cap_buckets` (under-cap buckets skip the window
-    entirely; over-cap buckets use a salted two-stage lowest-k whose
-    hottest task sees max(n/s, s·cap) rows). ``return_dropped=True``
-    additionally returns the drop report (bk, bucket_n, n_dropped) — the
-    same drop-and-report contract as the dedup operators."""
-    if n_planes is None:
-        n_planes = derive_n_planes(corpus.count(), target_bucket_size)
-    q = queries.select(F.col(q_id).alias("query_id"), F.col(q_vec).alias("qv"))
-    c = corpus.select(F.col(c_id).alias("neighbor_id"), F.col(c_vec).alias("cv"))
-    # ONE pass per side: all n_tables bucket keys in a single projection,
-    # exploded to (row, table-key) — the per-table union-of-joins shape
-    # rescanned the corpus n_tables times (1 scan vs 4 at 10⁹ rows). The
-    # candidate set is identical: union over tables ≡ explode over tables.
-    all_planes = [_srp_planes(dim, n_planes, t) for t in range(n_tables)]
-
-    def keys_for(vec: F.Column) -> F.Column:
-        return F.array(
-            *[
-                F.concat(F.lit(f"{t}:"), srp_bucket(vec, all_planes[t]))
-                for t in range(n_tables)
-            ]
-        )
-
-    qk = q.select("query_id", "qv", F.explode(keys_for(F.col("qv"))).alias("bk"))
-    ck = c.select("neighbor_id", "cv", F.explode(keys_for(F.col("cv"))).alias("bk"))
-    ck, dropped = _cap_buckets(ck, max_bucket_size, cap_salts)
-    cand = (
-        qk.join(ck, "bk")
-        .select("query_id", "qv", "neighbor_id", "cv")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    scored = cand.withColumn("cosine", cosine(F.col("qv"), F.col("cv")))
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc(F.round("cosine", 6)), F.asc("neighbor_id")
-    )
-    topk = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
-    if return_dropped:
-        return topk, dropped
-    return topk
-
-
-def centroid_topk_per_label(
-    embeddings: DataFrame,
-    k: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
-) -> DataFrame:
-    """IVF-style demo: per-label centroid (avg of vectors via posexplode +
-    groupBy), then top-k vectors closest to their own centroid. Exercises
-    the centroid-assignment half of an IVF index as declarative Spark."""
-    exploded = embeddings.select(
-        F.col(id_col).alias("id"),
-        F.col(label_col).alias("lbl"),
-        F.posexplode(F.col(vec_col)).alias("pos", "x"),
-    )
-    centroids = (
-        exploded.groupBy("lbl", "pos")
-        .agg(F.avg(F.col("x").cast("double")).alias("cx"))
-        .groupBy("lbl")
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "cx"))).alias("pairs"))
-        .select("lbl", F.transform("pairs", lambda p: p["cx"]).alias("centroid"))
-    )
-    joined = embeddings.select(
-        F.col(id_col).alias("id"), F.col(label_col).alias("lbl"), F.col(vec_col).alias("v")
-    ).join(F.broadcast(centroids), "lbl")
-    scored = joined.withColumn("cosine", cosine(F.col("v"), F.col("centroid")))
-    w = Window.partitionBy("lbl").orderBy(F.desc(F.round("cosine", 6)), F.asc("id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(F.col("lbl").alias("label"), F.col("id").alias("vec_id"), "cosine", "rank")
-    )
+    w = Window.partitionBy("query_id").orderBy(F.desc(F.round("cosine", 6)), F.asc("neighbor_id"))
+    ranked = scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return ranked.select("query_id", "neighbor_id", "cosine", "rank")

@@ -74,11 +74,11 @@ class IncrementalRecon:
         state reads and the per-ingest listdir O(auto_compact_every) no
         matter how many batches have ever been ingested.
 
-        Default 8, set from measurement (bench_r5_incremental.json, sf0.1
-        local[32], 4k-conv batches): per-ingest wall creeps ~+1.9 s per
-        live batch dir (23.3 s at 1 dir → 37.1 s at 8 — each ingest's
-        seen-key/state reads union every live dir) while one L0 fold costs
-        ~2 s and restores the next ingest to 24.5 s. Folding every 8
+        Default 8, set from measurement (eight 4k-conversation batches on
+        a 40k-conversation bootstrap at local[32]): per-ingest wall creeps
+        ~+1.9 s per live batch dir (23.3 s at 1 dir → 37.1 s at 8 — each
+        ingest's seen-key/state reads union every live dir) while one L0
+        fold costs ~2 s and restores the next ingest to 24.5 s. Folding every 8
         batches amortizes to ~0.25 s/batch against an avg ~7 s/batch creep
         saved; the old default of 64 would have let ingest walls roughly
         triple before the first fold.

@@ -18,6 +18,33 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _mem_total_bytes() -> int:
+    # physical memory; on Linux the same figure as MemTotal in /proc/meminfo
+    return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+
+
+def default_driver_mem() -> str:
+    """A quarter of physical memory, capped at 48g: the driver JVM shares
+    the host with its Python workers and the page cache, and a local-mode
+    heap sized past RAM gets the whole JVM OOM-killed mid-job."""
+    return f"{max(1, min(48, _mem_total_bytes() // (4 << 30)))}g"
+
+
+def default_local_dir() -> str:
+    """Shuffle/spill dir: tmpfs when it can hold a quarter of physical
+    memory (the same budget as the heap), else /tmp. On a real cluster every
+    executor has its own local SSDs; a local[N] app on one host shares one
+    disk, which otherwise becomes the scaling bottleneck the hardware
+    wouldn't have. A container's small default /dev/shm (64 MB) would fail
+    the first large shuffle, so it is not used."""
+    try:
+        st = os.statvfs("/dev/shm")
+    except OSError:
+        return "/tmp"
+    room = st.f_bavail * st.f_frsize >= _mem_total_bytes() // 4
+    return "/dev/shm/spark-local" if room else "/tmp"
+
+
 def build_session(
     app_name: str = "metadata_reconciliation_tool_spark",
     master: str | None = None,
@@ -31,13 +58,7 @@ def build_session(
         n = master.removeprefix("local[").removesuffix("]")
         shuffle_partitions = int(n) if n.isdigit() else 2 * cpus
 
-    # Shuffle/spill local dirs: prefer tmpfs when available. On a real
-    # cluster every executor has its own local SSDs; in this sandbox all
-    # local[N] threads share ONE virtio disk, which otherwise becomes the
-    # scaling bottleneck the hardware wouldn't have.
-    local_dir = os.environ.get("SPARK_GRAFT_LOCAL_DIR")
-    if local_dir is None:
-        local_dir = "/dev/shm/spark-local" if os.path.isdir("/dev/shm") else "/tmp"
+    local_dir = os.environ.get("SPARK_GRAFT_LOCAL_DIR") or default_local_dir()
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
@@ -49,7 +70,10 @@ def build_session(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_mem(),
+        )
         .config(
             "spark.sql.warehouse.dir",
             os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/spark-warehouse"),

@@ -4,6 +4,7 @@ priority dedup, typed keys."""
 from __future__ import annotations
 
 import itertools
+import re
 
 import pyspark.sql.functions as F
 
@@ -11,6 +12,7 @@ from metadata_reconciliation_tool_spark.operators.blocking import (
     add_block_keys,
     dedup_pairs,
     dictionary_candidates,
+    pair_join_partitions,
     self_candidates,
 )
 
@@ -128,3 +130,27 @@ def test_dictionary_candidates_shuffle_fallback_parity(spark, bundle):
     # exactly-once: no pair may be produced by more than one salt bucket
     dup = sh.groupBy("left_key", "right_key").count().filter("count > 1").count()
     assert dup == 0
+
+
+def test_pair_join_partitions_floor_is_local_only(spark):
+    """The two-wave floor (2 × cores) applies to local[...] masters only; a
+    cluster keeps its shuffle partitioning whatever its core count. On the
+    local[8] test session the balanced entity side has 16 partitions."""
+    assert pair_join_partitions("local[8]", 8, 8) == 16
+    assert pair_join_partitions("local", 8, 1) == 8
+    assert pair_join_partitions("local[4]", 32, 4) == 32
+    assert pair_join_partitions("spark://master:7077", 200, 400) == 200
+    assert pair_join_partitions("yarn", 64, 256) == 64
+    assert pair_join_partitions("local-cluster[2,1,1024]", 8, 8) == 8
+
+    ek = _keyed(spark, ["john smith", "jon smith"])
+    dk = add_block_keys(
+        spark.createDataFrame(
+            [("Q1", "john smith", "person", "")],
+            "auth_id string, norm_label string, entity_type string, description string",
+        ),
+        "norm_label",
+    )
+    pairs = dictionary_candidates(ek, dk, dictionary_rows=1, entity_rows=2)
+    plan = pairs._jdf.queryExecution().executedPlan().toString()
+    assert re.search(r"hashpartitioning\(left_key#\d+, 16\)", plan), plan

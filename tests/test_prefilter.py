@@ -114,60 +114,124 @@ def test_vectorized_bound_bit_identical_to_spec():
 
 
 def test_arrow_scoring_udf_matches_pandas_twin():
-    """make_scoring_batteries_arrow_udf (the Arrow-native fused UDF the
-    scoring projection runs since round 6) must return EXACTLY the pandas
-    twin's rows — same prune set, same kernel values, same nulls — on the
-    adversarial name distribution plus null/empty/title/boost edges, at
-    both an active cutoff and the disabled (-1) cutoff."""
-    import pyarrow as pa
+    """make_scoring_batteries_arrow_udf (the fused UDF the scoring
+    projection runs) must return EXACTLY the rows the scalar specs give —
+    same prune set, same kernel values, same nulls — on the adversarial
+    name distribution plus null/empty/title/boost edges, at both an active
+    cutoff and the disabled (-1) cutoff. Spec per pair: a non-equal pair
+    prunes iff min(0.55·na_upper_bound_py + 0.25·tlr + 0.2·wc + boost, 1)
+    < cutoff (null tlr/wc never prune, null boost is 0); pruned rows are
+    (null, null, bound, true), kept rows (jaro_winkler_py, name_align_py,
+    null, false). The pandas twin the test is named after is gone; the
+    scalar specs are its reference now."""
     import random
 
-    import numpy as np
+    import pyarrow as pa
 
+    from metadata_reconciliation_tool_spark.functions.prefilter import (
+        na_upper_bound_py,
+    )
     from metadata_reconciliation_tool_spark.functions.similarity import (
+        jaro_winkler_py,
         make_scoring_batteries_arrow_udf,
-        make_scoring_batteries_udf,
+        name_align_py,
     )
 
     rng = random.Random(31)
     pairs = _random_name_pairs(5_000, seed=31)
     pairs += [(None, None), (None, "x y"), ("", ""), ("dr", "dr"), ("a", "a")]
     n = len(pairs)
-    ls = pa.array([a for a, _ in pairs], type=pa.string())
-    rs = pa.array([b for _, b in pairs], type=pa.string())
-    tlr = pa.array(
-        [None if rng.random() < 0.01 else rng.random() for _ in range(n)],
-        type=pa.float64(),
-    )
-    wc = pa.array(
-        [None if rng.random() < 0.01 else rng.random() for _ in range(n)],
-        type=pa.float64(),
-    )
-    boost = pa.array(
-        [None if rng.random() < 0.3 else rng.choice([0.0, 0.05, 0.1]) for _ in range(n)],
-        type=pa.float64(),
-    )
-    import pandas as pd
+    tlr = [None if rng.random() < 0.01 else rng.random() for _ in range(n)]
+    wc = [None if rng.random() < 0.01 else rng.random() for _ in range(n)]
+    boost = [
+        None if rng.random() < 0.3 else rng.choice([0.0, 0.05, 0.1]) for _ in range(n)
+    ]
+    args = [
+        pa.array([a for a, _ in pairs], type=pa.string()),
+        pa.array([b for _, b in pairs], type=pa.string()),
+        *(pa.array(v, type=pa.float64()) for v in (tlr, wc, boost)),
+    ]
+    nan = float("nan")
 
+    def spec(k: int, cutoff: float) -> tuple:
+        a, b = pairs[k]
+        if cutoff > 0 and a != b:
+            ub = na_upper_bound_py(a, b)
+            t = nan if tlr[k] is None else tlr[k]
+            w = nan if wc[k] is None else wc[k]
+            blend = 0.55 * ub + 0.25 * t + 0.2 * w
+            if min(blend + (boost[k] or 0.0), 1.0) < cutoff:
+                return (None, None, ub, True)
+        return (jaro_winkler_py(a or "", b or ""), name_align_py(a, b), None, False)
+
+    cols = ("jaro_winkler", "name_align", "na_ub", "pruned")
+    pruned_any = False
     for cutoff in (0.5, 0.7, -1.0):
-        arrow_fn = make_scoring_batteries_arrow_udf(cutoff).func
-        pandas_fn = make_scoring_batteries_udf(cutoff).func
-        got = arrow_fn(ls, rs, tlr, wc, boost)
-        want = pandas_fn(
-            ls.to_pandas(), rs.to_pandas(), tlr.to_pandas(), wc.to_pandas(),
-            boost.to_pandas(),
-        )
-        for col in ("jaro_winkler", "name_align", "na_ub", "pruned"):
-            g = pd.Series(
-                got.field(col).to_numpy(zero_copy_only=False)
-            ).to_numpy(dtype="float64", na_value=np.nan)
-            w = want[col].to_numpy(dtype="float64", na_value=np.nan)
-            mism = np.flatnonzero(
-                ~((g == w) | (np.isnan(g) & np.isnan(w)))
-            )
-            assert mism.size == 0, (
-                f"cutoff={cutoff} col={col}: {[(pairs[i], g[i], w[i]) for i in mism[:5]]}"
-            )
+        got = make_scoring_batteries_arrow_udf(cutoff).func(*args)
+        rows = list(zip(*(got.field(c).to_pylist() for c in cols)))
+        mism = [
+            (pairs[k], rows[k], spec(k, cutoff))
+            for k in range(n)
+            if rows[k] != spec(k, cutoff)
+        ]
+        assert mism == [], f"cutoff={cutoff}: {mism[:5]}"
+        pruned_any |= any(r[3] for r in rows)
+        if cutoff < 0:
+            assert not any(r[3] for r in rows)
+    assert pruned_any
+
+
+def test_arrow_scoring_udf_all_null_names():
+    """A batch whose name column is entirely null (no dictionary entries on
+    that side) must score every row as the empty name would, not fail."""
+    import pyarrow as pa
+
+    from metadata_reconciliation_tool_spark.functions.prefilter import (
+        na_upper_bound_py,
+    )
+    from metadata_reconciliation_tool_spark.functions.similarity import (
+        make_scoring_batteries_arrow_udf,
+    )
+
+    ls = pa.array([None, None, None], type=pa.string())
+    rs = pa.array(["john smith", None, "a"], type=pa.string())
+    tlr, wc, boost = (pa.array([0.0, 0.0, 0.0]) for _ in range(3))
+    fn = make_scoring_batteries_arrow_udf(0.7).func
+    for a, b in ((ls, rs), (rs, ls), (ls, ls)):
+        got = fn(a, b, tlr, wc, boost)
+        pruned = got.field("pruned").to_pylist()
+        ub = got.field("na_ub").to_pylist()
+        for k, (x, y) in enumerate(zip(a.to_pylist(), b.to_pylist())):
+            if x == y:  # equal (both null) never prunes
+                assert not pruned[k]
+            else:
+                assert pruned[k] and ub[k] == na_upper_bound_py(x, y)
+
+
+def test_arrow_scoring_udf_combines_each_chunked_argument():
+    """Any argument may arrive as a ChunkedArray, not only the first: a plain
+    ``s1`` with chunked ``s2``/``tlr`` must give the all-plain result."""
+    import pyarrow as pa
+
+    from metadata_reconciliation_tool_spark.functions.similarity import (
+        make_scoring_batteries_arrow_udf,
+    )
+
+    s1 = pa.array(["john smith", "j smith", "dr anne li", "x"])
+    s2 = ["jon smith", "john smith", "anne lee", "x"]
+    tlr = [0.9, 0.5, 0.1, 1.0]
+    wc = pa.array([0.5, 0.5, 0.2, 0.95])
+    boost = pa.array([0.0, 0.0, 0.0, 0.0])
+    fn = make_scoring_batteries_arrow_udf(0.7).func
+    want = fn(s1, pa.array(s2), pa.array(tlr), wc, boost)
+    got = fn(
+        s1,
+        pa.chunked_array([s2[:1], s2[1:]]),
+        pa.chunked_array([tlr[:3], tlr[3:]]),
+        wc,
+        boost,
+    )
+    assert got.equals(want)
 
 
 def test_vectorized_bound_dense_fallback_edges():

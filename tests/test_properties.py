@@ -128,106 +128,3 @@ def test_na_upper_bound_arbitrary_text(a, b):
     assert ub >= name_align_py(a, b) - 1e-12
     assert ub >= 0.0
 
-
-# ---------------------------------------------------------------------------
-# Corrupt-shard fuzz for the real media decoders (round-4 verdict item 8):
-# at 100 TB a truncated or bit-flipped payload must fail with a TYPED,
-# diagnosable ValueError (or decode to something plausible when the damage
-# is in pixel/plane data) — never a numpy buffer-overrun, struct.error,
-# IndexError, or a multi-GB allocation from a corrupt dims field.
-# ---------------------------------------------------------------------------
-
-
-@given(st.integers(0, 63), st.floats(0.0, 1.0, exclude_max=True))
-@settings(max_examples=120, deadline=None)
-def test_bmp_truncation_raises_typed(media_id, frac):
-    from metadata_reconciliation_tool_spark.operators.multimodal import (
-        bmp_bytes_py,
-        decode_bmp_py,
-    )
-
-    p = bmp_bytes_py(media_id)
-    cut = p[: int(len(p) * frac)]
-    try:
-        decode_bmp_py(cut)
-        raise AssertionError("truncated BMP decoded without error")
-    except ValueError as e:
-        assert "BMP" in str(e)  # diagnosable, not numpy's buffer message
-
-
-@given(st.integers(0, 63), st.integers(0, 10_000), st.integers(1, 255))
-@settings(max_examples=200, deadline=None)
-def test_bmp_bitflip_valueerror_or_success(media_id, pos, xor):
-    from metadata_reconciliation_tool_spark.operators.multimodal import (
-        bmp_bytes_py,
-        decode_bmp_py,
-    )
-
-    p = bytearray(bmp_bytes_py(media_id))
-    p[pos % len(p)] ^= xor
-    try:
-        out = decode_bmp_py(bytes(p))
-        assert set(out) == {
-            "width", "height", "n_bytes", "mean_b", "mean_g", "mean_r", "peak"
-        }
-    except ValueError:
-        pass  # typed + diagnosable is the contract; anything else fails
-
-
-@given(st.integers(0, 63), st.floats(0.0, 1.0, exclude_max=True))
-@settings(max_examples=120, deadline=None)
-def test_y4m_truncation_typed_or_fewer_frames(media_id, frac):
-    from metadata_reconciliation_tool_spark.operators.multimodal import (
-        decode_y4m_py,
-        y4m_bytes_py,
-        y4m_n_frames_py,
-    )
-
-    p = y4m_bytes_py(media_id)
-    cut = p[: int(len(p) * frac)]
-    try:
-        frames = decode_y4m_py(cut)
-        # a cut exactly at a frame boundary IS a valid shorter stream
-        assert len(frames) < y4m_n_frames_py(media_id)
-    except ValueError as e:
-        assert "Y4M" in str(e) or "YUV4MPEG2" in str(e) or "W/H" in str(e)
-
-
-@given(st.integers(0, 63), st.integers(0, 10_000), st.integers(1, 255))
-@settings(max_examples=200, deadline=None)
-def test_y4m_bitflip_valueerror_or_success(media_id, pos, xor):
-    from metadata_reconciliation_tool_spark.operators.multimodal import (
-        decode_y4m_py,
-        y4m_bytes_py,
-    )
-
-    p = bytearray(y4m_bytes_py(media_id))
-    p[pos % len(p)] ^= xor
-    try:
-        for fr in decode_y4m_py(bytes(p)):
-            assert fr["width"] > 0 and fr["height"] > 0
-    except ValueError:
-        pass
-
-
-def test_decoders_unchanged_on_valid_input():
-    """The new validation must not change any valid decode (the DuckDB
-    round-trip oracles pin the values; this pins the full synthetic id
-    range cheaply)."""
-    from metadata_reconciliation_tool_spark.operators.multimodal import (
-        bmp_bytes_py,
-        bmp_dims_py,
-        decode_bmp_py,
-        decode_y4m_py,
-        y4m_bytes_py,
-        y4m_dims_py,
-        y4m_n_frames_py,
-    )
-
-    for mid in range(64):
-        out = decode_bmp_py(bmp_bytes_py(mid))
-        assert (out["width"], out["height"]) == bmp_dims_py(mid)
-        frames = decode_y4m_py(y4m_bytes_py(mid))
-        assert len(frames) == y4m_n_frames_py(mid)
-        w, h = y4m_dims_py(mid)
-        assert all((fr["width"], fr["height"]) == (w, h) for fr in frames)

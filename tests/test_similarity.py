@@ -1,4 +1,4 @@
-"""Similarity-kernel pins (pure Python) + UDF↔twin parity."""
+"""Similarity-kernel pins (pure Python) + UDF↔spec parity."""
 
 from __future__ import annotations
 
@@ -10,7 +10,7 @@ from metadata_reconciliation_tool_spark.functions.similarity import (
     lev_ratio_py,
     levenshtein_py,
     lsh_keys_py,
-    lsh_keys_udf,
+    lsh_keys_sigs_udf,
     metaphone_py,
     name_align_py,
     surname_key_py,
@@ -97,25 +97,31 @@ def test_initials_subset_u4(spark):
 
 
 def test_lsh_and_surname_udf_twin_parity(spark):
+    """lsh_keys_sigs_udf's keys equal lsh_keys_py, and each sig is the
+    signed 64-bit reading of the hash embedded in its key."""
     names = ["william shakespeare", "shakespear william", "mount lockwood", ""]
     df = spark.createDataFrame([(n,) for n in names], ["n"])
     rows = df.select(
         "n",
-        lsh_keys_udf(F.col("n")).alias("lsh"),
+        lsh_keys_sigs_udf(F.col("n")).alias("lsh"),
         surname_key_udf(F.col("n")).alias("sk"),
     ).collect()
     for r in rows:
-        assert list(r.lsh) == lsh_keys_py(r.n)
+        assert list(r.lsh.keys) == lsh_keys_py(r.n)
+        assert list(r.lsh.sigs) == [
+            int.from_bytes(bytes.fromhex(k.split(":")[1]), "big", signed=True)
+            for k in r.lsh.keys
+        ]
         assert r.sk == surname_key_py(r.n)
 
 
-def test_batteries_udf_equal_fast_path_parity(spark):
-    """batteries_udf short-circuits identical non-empty strings to exactly
-    (1.0, 1.0); every case — equal, unequal, empty-empty, one-empty — must
-    equal the raw per-row kernels."""
+def test_scoring_udf_equal_fast_path_parity(spark):
+    """The scoring UDF short-circuits identical names with a non-title token
+    to exactly (1.0, 1.0); every case — equal, unequal, empty-empty,
+    one-empty — must equal the raw per-row kernels."""
     from metadata_reconciliation_tool_spark.functions.similarity import (
-        batteries_udf,
         jaro_winkler_py,
+        make_scoring_batteries_arrow_udf,
         name_align_py,
     )
 
@@ -134,7 +140,12 @@ def test_batteries_udf_equal_fast_path_parity(spark):
         ("  ", "  "),
     ]
     df = spark.createDataFrame(cases, "a string, b string")
-    rows = df.select("a", "b", batteries_udf(F.col("a"), F.col("b")).alias("t")).collect()
+    udf = make_scoring_batteries_arrow_udf(-1.0)
+    zero = F.lit(0.0)
+    rows = df.select(
+        "a", "b", udf(F.col("a"), F.col("b"), zero, zero, zero).alias("t")
+    ).collect()
     for r in rows:
+        assert not r.t.pruned
         assert r.t.jaro_winkler == jaro_winkler_py(r.a or "", r.b or "")
         assert r.t.name_align == name_align_py(r.a, r.b)
