@@ -16,8 +16,7 @@ Architecture (Spark-first, NOT a port):
                  confidence formulas as pure Column expressions
 - ``operators``  dataflow layer: extraction, multi-pass blocking,
                  pair scoring, ranking/top-k, iterative connected-components
-                 clustering; off the pipeline path, record dedup and exact
-                 cosine top-k
+                 clustering
 - ``sources``    readers (parquet / flexible CSV / Iceberg-if-available) and
                  writers (stage checkpoints, CSV/JSON exports)
 - ``plans``      pipeline orchestration with idempotent checkpoint/resume and

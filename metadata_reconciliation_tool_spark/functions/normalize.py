@@ -127,11 +127,6 @@ def token_sort(col: Column) -> Column:
     return F.array_join(F.array_sort(tokens(col)), " ")
 
 
-def strip_titles(tokens_col: Column) -> Column:
-    """F11: drop {mr,mrs,ms,dr,prof,sir,dame} tokens before comparison."""
-    return F.array_except(tokens_col, F.lit(TITLE_WORDS))
-
-
 def entity_key(norm_name: Column, entity_type: Column, context_json: Column | None = None) -> Column:
     """F5: deterministic md5 key — md5('{norm}:{type}:{context}')
     (reconciliation_engine.py:70-74). Context defaults to '{}' like the

@@ -1,7 +1,7 @@
 """Pair scoring — batched similarity batteries + the reference's confidence
 formulas over blocked candidate pairs (SURVEY.md §2.8 F6–F12, §2.10).
 
-One join brings both sides' names onto the pair row; the batteries
+Blocking carries both sides' names onto the pair row; the batteries
 (Jaro-Winkler, token-set Levenshtein — Arrow-batched pandas UDFs) and the
 F7 Wikidata confidence formula (pure Column expr) run in a single
 projection. Jaccard / exact / initials-subset round out the composite.
@@ -38,7 +38,7 @@ def cap_persisted_scores(
     this policy, identical decisions).
 
     - pruned ``self`` rows are DROPPED: no consumer exists. Clusters read
-      only ``is_match`` edges (a pruned row's score < prune_cutoff ≤
+      only ``is_match`` edges (a pruned row's score < prune cutoff ≤
       threshold can never satisfy it) and review is entity↔authority only.
       The filter is row-local, so it commutes with any batching — full and
       incremental runs persist identical self rows.
@@ -70,40 +70,11 @@ def cap_persisted_scores(
     )
 
 
-def attach_names(
-    pairs: DataFrame,
-    left: DataFrame,
-    right: DataFrame,
-    left_id: str = "entity_key",
-    right_id: str = "entity_key",
-    left_name: str = "norm_name",
-    right_name: str = "norm_name",
-    right_description: str | None = None,
-) -> DataFrame:
-    """Join pair ids to their normalized names (+ optional description).
-
-    The right side is broadcast when it is the authority dictionary; for
-    entity↔entity pairs both joins shuffle on the key — unavoidable and
-    linear in pair count.
-    """
-    l = left.select(
-        F.col(left_id).alias("left_key"), F.col(left_name).alias("left_name")
-    )
-    rcols = [F.col(right_id).alias("right_key"), F.col(right_name).alias("right_name")]
-    if right_description:
-        rcols.append(F.col(right_description).alias("right_description"))
-    r = right.select(*rcols)
-    out = pairs.join(l, "left_key").join(r, "right_key")
-    if not right_description:
-        out = out.withColumn("right_description", F.lit(None).cast("string"))
-    return out
-
-
 def score_pairs(
     named_pairs: DataFrame,
     threshold: float = DEFAULT_MATCH_THRESHOLD,
     prefilter: bool = True,
-    prune_cutoff: float | None = None,
+    success_threshold: float = 0.5,
 ) -> DataFrame:
     """named_pairs(left_key,right_key,block_pass,block_key,left_name,
     right_name,right_description[,left_sorted,right_sorted]) → SCORES
@@ -117,22 +88,21 @@ def score_pairs(
     through the pair table (left_sorted/right_sorted) to skip even that.
 
     **Prefilter contract** (``prefilter=True``, the default): pairs whose
-    composite score is PROVABLY below ``prune_cutoff`` — computed with the
+    composite score is PROVABLY below the prune cutoff — computed with the
     sound bound :func:`..functions.prefilter.na_upper_bound_py` (~7 µs)
     substituted for the alignment kernel (~34 µs), with the JVM-computed
     exact components (token-Levenshtein, F7, boost) fed into the decision —
     skip the Jaro-Winkler/alignment kernels (the bound runs inside the same
     single Arrow crossing; a Catalyst HOF formulation measured ~20× slower
     than the kernels it replaces — see functions/prefilter.py).
-    ``prune_cutoff`` defaults to ``min(threshold, 0.5)``: 0.5 is the
-    reference's P6 "successful match" bar (api.py:150), so every decision
-    any consumer makes — ``is_match`` (>= threshold), best-match/job-status
-    filters (> 0.5) — is identical with the prefilter on or off
-    (parity-tested). A caller whose decision bar sits BELOW 0.5 must pass
-    ``prune_cutoff <= bar`` — ReconPipeline/IncrementalRecon plumb
-    ``min(match_threshold, success_threshold)`` through for exactly this
-    reason. For pruned rows the emitted ``score`` is the upper
-    bound itself (< prune_cutoff, marked ``score_pruned=true``) and
+    The cutoff is ``min(threshold, success_threshold)``: it must sit at
+    or below EVERY decision bar a consumer applies — ``is_match``
+    (>= threshold) and the best-match/job-status filters
+    (> ``success_threshold``, the reference's P6 "successful match" bar,
+    0.5 at api.py:150, configurable below it) — so every decision is
+    identical with the prefilter on or off (parity-tested). For pruned
+    rows the emitted ``score`` is the upper bound itself (< the cutoff,
+    marked ``score_pruned=true``) and
     ``jaro_winkler``/``name_align`` are null; all other columns
     (token_lev_ratio, jaccard, wikidata_confidence, bands-of-emitted-score)
     are exact. Rows with ``score_pruned=false`` are bit-identical to a
@@ -253,11 +223,7 @@ def score_pairs(
     # prefilter=False is expressed as an unreachable cutoff (-1): the same
     # single fused UDF serves both modes, and nothing can score below -1,
     # so every row takes the exact kernel path
-    cutoff = (
-        (min(threshold, 0.5) if prune_cutoff is None else prune_cutoff)
-        if prefilter
-        else -1.0
-    )
+    cutoff = min(threshold, success_threshold) if prefilter else -1.0
     # ONE projection, ONE Arrow crossing: the JVM computes the exact
     # composite components (token-Levenshtein via built-in levenshtein on
     # the token-sorted forms — whole-stage codegen — plus F7 and the

@@ -7,11 +7,13 @@ NEW batch against the existing checkpointed state:
 1. extract + normalize the new batch; anti-join against the existing
    distinct-entities table → only genuinely unseen entity keys proceed
    (the md5 key makes "seen" exact);
-2. block the new entities against (a) the broadcast dictionary and (b) the
-   corpus via :func:`blocking.asymmetric_candidates` — new↔old and new↔new
-   pairs only; old↔old pairs are never *materialized* (the corpus side is
-   semi-joined down to blocks the batch touches before any pair is built,
-   so per-batch cost scales with the batch, not the corpus);
+2. block the new entities against (a) the dictionary and (b) the corpus
+   through the bootstrap's own candidate plan
+   (:func:`.pipeline.build_candidate_pairs` with ``new_keyed``) — new↔old
+   and new↔new pairs only; old↔old pairs are never *materialized* (the
+   corpus side is semi-joined down to blocks the batch touches before any
+   pair is built, so pair work scales with the batch; keying the corpus
+   for that semi-join still runs the key UDFs over every corpus entity);
 3. score only the new pairs (same fused-UDF scorer);
 4. append to state ATOMICALLY: each batch writes its rows under
    ``batches/<batch_id>/{entities_distinct,scoring,best}`` (``best`` = the
@@ -58,6 +60,7 @@ from ..operators import extract as E
 from ..operators import scoring as S
 from ..sources import statefs as StateFS
 from ..sources import writers as W
+from .pipeline import build_best_matches, build_candidate_pairs
 
 COMMIT_MARKER = "_COMMITTED"
 
@@ -133,14 +136,10 @@ class IncrementalRecon:
         )
         self.max_block_size = max_block_size
         self.auto_compact_every = auto_compact_every
-        # bounded-probe results for the dictionary broadcast gate, keyed by
-        # the dictionary plan's semanticHash (ADVICE r4 low: the former
-        # per-instance bool assumed "the dictionary is stable" by comment
-        # only — an ingest called with a DIFFERENT, larger dictionary reused
-        # a stale broadcast=True verdict and could broadcast a >2M-row
-        # exploded key frame). Same plan → cached verdict; a changed
-        # dictionary re-probes.
-        self._dict_broadcast: dict[int, bool] = {}
+        # dictionary broadcast-gate verdicts by dictionary plan
+        # (blocking.dict_broadcast_gate): the common stable-dictionary job
+        # pays one probe, a swapped dictionary re-probes
+        self._dict_broadcast: dict = {}
 
     def _read_job_config(self) -> dict:
         import json
@@ -307,27 +306,8 @@ class IncrementalRecon:
         # clusters overlays fold latest-wins by each source dir's seq — the
         # consolidated delta holds exactly the rows the pre-fold reader
         # resolved from these dirs, so reads are identical before/after
-        delta_frames = []
-        for b in batch_ids:
-            p = os.path.join(self._batch_dir(b), "clusters_delta")
-            if W.stage_exists(self.spark, p):
-                delta_frames.append(
-                    W.read_stage(self.spark, p).withColumn(
-                        "_seq", F.lit(self._seq_of(b))
-                    )
-                )
-        if delta_frames:
-            from functools import reduce
-
-            from pyspark.sql import Window
-
-            alld = reduce(lambda a, c: a.unionByName(c), delta_frames)
-            w = Window.partitionBy("entity_key").orderBy(F.desc("_seq"))
-            resolved = (
-                alld.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1)
-                .select("entity_key", "cluster_id")
-            )
+        resolved = self._resolve_overlays(batch_ids)
+        if resolved is not None:
             W.write_stage(resolved, os.path.join(cdir, "clusters_delta"))
         self.fs.write_text(
             os.path.join(cdir, "seq.json"),
@@ -460,44 +440,21 @@ class IncrementalRecon:
             old_distinct.select("entity_key"), "entity_key", "left_anti"
         )
 
-        nkeyed = B.add_block_keys(new_distinct)
-        dprep = E.prepare_dictionary(dictionary)
-        # new ↔ dictionary; the broadcast-gate probe runs once per DISTINCT
-        # dictionary plan, not once per ingest — the common stable-dictionary
-        # job pays one probe, a swapped dictionary re-probes (ADVICE r4 low).
-        # Probed on the PREPARED frame (pre-keys): add_block_keys is a
-        # row-preserving projection, so the count gate is identical to the
-        # former keyed-frame probe while skipping its per-row UDF work.
-        dict_id = dictionary.semanticHash()
-        if dict_id not in self._dict_broadcast:
-            self._dict_broadcast[dict_id] = (
-                dprep.limit(B.DICT_BROADCAST_MAX_ROWS + 1).count()
-                <= B.DICT_BROADCAST_MAX_ROWS
-            )
-        if self._dict_broadcast[dict_id]:
-            # same single-task pathology/fix as ReconPipeline.blocking: the
-            # A3 window's tiny shuffle AQE-coalesces to one partition and
-            # the key UDFs serialize; the explicit repartition fans them
-            # out, gated on the broadcast verdict
-            dprep = dprep.repartition(spark.sparkContext.defaultParallelism)
-        dkeyed = B.add_block_keys(dprep, "norm_label")
-        dict_pairs = B.dictionary_candidates(
-            nkeyed, dkeyed, broadcast=self._dict_broadcast[dict_id]
-        ).withColumn("pair_kind", F.lit("dict"))
-        # new ↔ (old ∪ new), old↔old never materialized
-        all_keyed = B.add_block_keys(old_distinct).unionByName(nkeyed)
-        touching_new, _dropped = B.asymmetric_candidates(
-            nkeyed, all_keyed, self.max_block_size
+        dict_small = B.dict_broadcast_gate(
+            dictionary, B.DICT_BROADCAST_MAX_ROWS, self._dict_broadcast
         )
-        new_pairs = dict_pairs.unionByName(
-            touching_new.withColumn("pair_kind", F.lit("self")),
-            allowMissingColumns=True,
+        new_pairs, _dropped = build_candidate_pairs(
+            B.add_block_keys(old_distinct),
+            dictionary,
+            dict_small,
+            self.max_block_size,
+            new_keyed=B.add_block_keys(new_distinct),
         )
         new_scores = S.cap_persisted_scores(
             S.score_pairs(
                 new_pairs,
                 self.match_threshold,
-                prune_cutoff=min(self.match_threshold, self.success_threshold),
+                success_threshold=self.success_threshold,
             ),
             self.pruned_dict_top_k,
         )
@@ -517,8 +474,6 @@ class IncrementalRecon:
         # just-written parquet (NOT the lazy plans — that would re-run the
         # fused scoring UDF a second time), same shared plan + label gate
         # as the bootstrap stage (build_best_matches).
-        from .pipeline import build_best_matches
-
         batch_best = build_best_matches(
             spark.read.parquet(os.path.join(bdir, "entities_distinct")),
             spark.read.parquet(os.path.join(bdir, "scoring")).filter(
@@ -526,7 +481,7 @@ class IncrementalRecon:
             ),
             dictionary,
             self.success_threshold,
-            self._dict_broadcast[dict_id],
+            dict_small,
         )
         batch_best.write.mode("overwrite").parquet(os.path.join(bdir, "best"))
         # ingest sequence for latest-wins overlay resolution, persisted
@@ -567,13 +522,25 @@ class IncrementalRecon:
         filtered with one anti-join against those keys (AQE broadcasts the
         small side); compaction folds overlays so the live overlay count
         stays O(auto_compact_every)."""
+        base = W.read_stage(self.spark, self._stage("clusters"))
+        resolved = self._resolve_overlays(self.committed_batches())
+        if resolved is None:
+            return base
+        return base.join(
+            resolved.select("entity_key"), "entity_key", "left_anti"
+        ).unionByName(resolved)
+
+    def _resolve_overlays(self, batch_ids: list[str]) -> DataFrame | None:
+        """The ``clusters_delta`` overlays of ``batch_ids`` resolved
+        latest-wins by each dir's ingest sequence — one
+        (entity_key, cluster_id) row per overlaid entity, or None when no
+        dir carries an overlay."""
         from functools import reduce
 
         from pyspark.sql import Window
 
-        base = W.read_stage(self.spark, self._stage("clusters"))
         frames = []
-        for b in self.committed_batches():
+        for b in batch_ids:
             p = os.path.join(self._batch_dir(b), "clusters_delta")
             if W.stage_exists(self.spark, p):
                 frames.append(
@@ -582,17 +549,14 @@ class IncrementalRecon:
                     )
                 )
         if not frames:
-            return base
+            return None
         alld = reduce(lambda a, c: a.unionByName(c), frames)
         w = Window.partitionBy("entity_key").orderBy(F.desc("_seq"))
-        resolved = (
+        return (
             alld.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)
             .select("entity_key", "cluster_id")
         )
-        return base.join(
-            resolved.select("entity_key"), "entity_key", "left_anti"
-        ).unionByName(resolved)
 
     def best_matches(self) -> DataFrame:
         """Corpus-wide best matches: bootstrap stage_best ∪ committed batch

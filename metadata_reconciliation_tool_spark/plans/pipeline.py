@@ -117,6 +117,61 @@ def build_best_matches(
     )
 
 
+def build_candidate_pairs(
+    entities_keyed: DataFrame,
+    dictionary: DataFrame,
+    dict_small: bool,
+    max_block_size: int,
+    broadcast_max_rows: int = B.DICT_BROADCAST_MAX_ROWS,
+    entity_rows: int | None = None,
+    new_keyed: DataFrame | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """Candidate pairs for one scoring pass — ONE plan shared by the
+    bootstrap blocking stage and the per-batch incremental ingest:
+    entity↔dictionary pairs (``pair_kind='dict'``) ∪ entity↔entity pairs
+    (``'self'``). Returns (pairs, dropped_blocks).
+
+    ``new_keyed`` switches to the ingest shape (see
+    :func:`blocking.self_candidates`): the dictionary is matched against
+    the batch only and ``entities_keyed`` is the prior corpus.
+    ``dict_small`` is the caller's :func:`blocking.dict_broadcast_gate`
+    verdict, shared with the best-match label attach; ``entity_rows`` is
+    the row count of the frame being blocked (the batch on ingest)."""
+    # multi-source union semantics: default source + per-(norm_label,
+    # source) A3 dedup (reconciliation_engine.py:388-437)
+    dprep = E.prepare_dictionary(dictionary)
+    if dict_small:
+        # the A3 dedup window shuffles the dictionary, AQE coalesces the
+        # (small) shuffle to ONE partition, and add_block_keys' two pandas
+        # UDFs then run single-threaded — a measured ~2.4 s single-task job
+        # on every run at every core count (round 6, the pipeline's largest
+        # fixed serial slice). An explicit-count repartition (explicit so
+        # AQE cannot re-coalesce it) fans the UDF work out; gated on the
+        # broadcast verdict so a huge dictionary — whose shuffle AQE
+        # already sizes properly — never pays an extra shuffle.
+        dprep = dprep.repartition(dprep.sparkSession.sparkContext.defaultParallelism)
+    dict_pairs = B.dictionary_candidates(
+        entities_keyed if new_keyed is None else new_keyed,
+        B.add_block_keys(dprep, "norm_label"),
+        broadcast=dict_small,
+        # feeds the broadcast path's pair-task balance gate without a probe
+        entity_rows=entity_rows,
+    ).withColumn("pair_kind", F.lit("dict"))
+    self_pairs, dropped = B.self_candidates(
+        entities_keyed,
+        max_block_size,
+        broadcast_max_rows=broadcast_max_rows,
+        entity_rows=entity_rows,
+        new_keyed=new_keyed,
+    )
+    # self pairs carry no source metadata → nulls (boost nothing)
+    pairs = dict_pairs.unionByName(
+        self_pairs.withColumn("pair_kind", F.lit("self")),
+        allowMissingColumns=True,
+    )
+    return pairs, dropped
+
+
 class ReconPipeline:
     def __init__(self, spark: SparkSession, cfg: ReconConfig, fs=None):
         self.spark = spark
@@ -126,7 +181,9 @@ class ReconPipeline:
         # (sources/statefs.py; round-4 verdict item 6)
         self.fs = fs if fs is not None else StateFS.LocalStateFS()
         self._metrics_rows: list[tuple[str, str, str, float]] = []
-        self._dict_small_cache: bool | None = None
+        # dictionary broadcast-gate verdicts by dictionary plan
+        # (blocking.dict_broadcast_gate)
+        self._dict_broadcast: dict = {}
         # wall seconds per computed stage (resume read-backs not recorded) —
         # free observability: no extra Spark jobs, just driver-side clocks
         self.stage_walls: dict[str, float] = {}
@@ -142,15 +199,14 @@ class ReconPipeline:
     # -- stage plumbing ------------------------------------------------------
 
     def _dict_small(self, dictionary: DataFrame) -> bool:
-        """One bounded broadcast-gate probe per pipeline instance (the scan
-        stops at ``broadcast_max_rows + 1`` rows): blocking and best-match
-        share the verdict instead of each paying a probe job. The ±1-row
-        difference vs probing the deduped keyed frame is irrelevant — the
-        gate is an order-of-magnitude safety bound, not an exact budget."""
-        if self._dict_small_cache is None:
-            gate = self.cfg.broadcast_max_rows
-            self._dict_small_cache = dictionary.limit(gate + 1).count() <= gate
-        return self._dict_small_cache
+        """Broadcast-gate verdict for ``dictionary``: blocking and
+        best-match share one bounded probe per distinct dictionary
+        instead of each paying a probe job. The ±1-row difference vs
+        probing the deduped keyed frame is irrelevant — the gate is an
+        order-of-magnitude safety bound, not an exact budget."""
+        return B.dict_broadcast_gate(
+            dictionary, self.cfg.broadcast_max_rows, self._dict_broadcast
+        )
 
     def _path(self, stage: str) -> str:
         return os.path.join(self.cfg.work_dir, self.cfg.job_id, f"stage_{stage}")
@@ -252,47 +308,20 @@ class ReconPipeline:
         ekeyed = materialize(B.add_block_keys(distinct))
 
         def compute():
-            # multi-source union semantics: default source + per-(norm_label,
-            # source) A3 dedup (reconciliation_engine.py:388-437)
-            dprep = E.prepare_dictionary(dictionary)
-            dict_small = self._dict_small(dictionary)
-            if dict_small:
-                # the A3 dedup window shuffles the dictionary, AQE coalesces
-                # the (small) shuffle to ONE partition, and add_block_keys'
-                # two pandas UDFs then run single-threaded — a measured
-                # ~2.4 s single-task job on every run at every core count
-                # (round 6, the pipeline's largest fixed serial slice). An
-                # explicit-count repartition (explicit so AQE cannot
-                # re-coalesce it) fans the UDF work out; gated on the
-                # broadcast verdict so a huge dictionary — whose shuffle AQE
-                # already sizes properly — never pays an extra shuffle.
-                dprep = dprep.repartition(
-                    self.spark.sparkContext.defaultParallelism
-                )
-            dkeyed = B.add_block_keys(dprep, "norm_label")
-            dict_pairs = B.dictionary_candidates(
+            pairs, dropped = build_candidate_pairs(
                 ekeyed,
-                dkeyed,
-                broadcast=dict_small,
-                # observed on the distinct stage write — feeds the
-                # broadcast path's pair-task balance gate without a probe
-                entity_rows=self.stage_rows.get("entities_distinct"),
-            ).withColumn("pair_kind", F.lit("dict"))
-            self_pairs, dropped = B.self_candidates(
-                ekeyed,
+                dictionary,
+                self._dict_small(dictionary),
                 self.cfg.max_block_size,
                 broadcast_max_rows=self.cfg.broadcast_max_rows,
+                # observed on the distinct stage write
                 entity_rows=self.stage_rows.get("entities_distinct"),
             )
             if self.cfg.collect_metrics:
                 self._metric(
                     "blocking", "oversized_blocks_dropped", float(dropped.count())
                 )
-            # self pairs carry no source metadata → nulls (boost nothing)
-            return dict_pairs.unionByName(
-                self_pairs.withColumn("pair_kind", F.lit("self")),
-                allowMissingColumns=True,
-            )
+            return pairs
 
         if self.cfg.checkpoint_blocking:
             return self._run_stage("blocking", compute)
@@ -314,14 +343,10 @@ class ReconPipeline:
         obs = Observation()
 
         def compute():
-            # the prune cutoff must sit at or below EVERY decision bar a
-            # consumer applies — match_threshold (is_match) AND the P6
-            # success_threshold (best-match / job-status filters), which is
-            # configurable below score_pairs' 0.5 default
             scored = S.score_pairs(
                 pairs,
                 self.cfg.match_threshold,
-                prune_cutoff=min(self.cfg.match_threshold, self.cfg.success_threshold),
+                success_threshold=self.cfg.success_threshold,
             )
             # true scored/pruned pair counts OBSERVED ahead of the
             # persistence policy's filter (free on the stage write): the

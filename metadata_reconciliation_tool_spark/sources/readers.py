@@ -65,7 +65,3 @@ def read_transcripts(spark: SparkSession, path_or_table: str) -> DataFrame:
             pass
         return spark.table(path_or_table)
     return spark.read.parquet(path_or_table)
-
-
-def read_testdata(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{table}.parquet")

@@ -7,8 +7,8 @@ transcripts arrive continuously (an Iceberg/file stream) and each
 micro-batch is reconciled against the checkpointed state via
 ``IncrementalRecon.ingest_batch`` inside ``foreachBatch``:
 
-- per-batch cost scales with the batch (asymmetric candidates — old↔old
-  pairs never materialized);
+- per-batch candidates touch the batch only (old↔old pairs are never
+  materialized);
 - Spark's streaming checkpoint gives at-least-once micro-batch delivery;
   redelivery is safe because the batch id is the (stable) streaming batch
   id and ingest_batch overwrites its own uncommitted leftovers before

@@ -8,9 +8,9 @@ import re
 
 import pyspark.sql.functions as F
 
+from blocking_spec import dedup_pairs
 from metadata_reconciliation_tool_spark.operators.blocking import (
     add_block_keys,
-    dedup_pairs,
     dictionary_candidates,
     pair_join_partitions,
     self_candidates,
@@ -151,6 +151,6 @@ def test_pair_join_partitions_floor_is_local_only(spark):
         ),
         "norm_label",
     )
-    pairs = dictionary_candidates(ek, dk, dictionary_rows=1, entity_rows=2)
+    pairs = dictionary_candidates(ek, dk, broadcast=True, entity_rows=2)
     plan = pairs._jdf.queryExecution().executedPlan().toString()
     assert re.search(r"hashpartitioning\(left_key#\d+, 16\)", plan), plan

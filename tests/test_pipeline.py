@@ -198,6 +198,28 @@ def test_best_match_label_join_gate_parity(spark, bundle, pipeline_out, tmp_path
     assert a == b
 
 
+def test_dict_broadcast_gate_reprobes_per_dictionary(spark, bundle, tmp_path):
+    """One pipeline, two dictionaries on either side of
+    ``broadcast_max_rows``: the gate must answer for the dictionary it is
+    given — a verdict cached for the small one must never broadcast the
+    large one."""
+    from metadata_reconciliation_tool_spark.plans.pipeline import (
+        ReconConfig,
+        ReconPipeline,
+    )
+
+    small = bundle["dictionary"].limit(3)
+    large = bundle["dictionary"]
+    assert large.count() > 5
+    pipe = ReconPipeline(
+        spark,
+        ReconConfig(job_id="g", work_dir=str(tmp_path), broadcast_max_rows=5),
+    )
+    assert pipe._dict_small(small) is True
+    assert pipe._dict_small(large) is False
+    assert pipe._dict_small(small) is True
+
+
 def test_job_config_resume_guard(spark, bundle, tmp_path):
     """ADVICE r4 medium: run() must not rewrite job_config.json while
     serving stages scored under the OLD bars. Contradicting thresholds on

@@ -497,7 +497,7 @@ def test_prefilter_prunes_majority_of_self_pairs(spark, bundle):
 
 def test_prune_cutoff_respects_lower_decision_bar(spark, bundle):
     """A consumer bar below 0.5 (configurable success_threshold) must be
-    respected: with prune_cutoff=0.45 no pruned row may carry a score at or
+    respected: with success_threshold=0.45 no pruned row may carry a score at or
     above 0.45, and the >0.45 filter set must match a prefilter-off run —
     the emitted upper bound must never push a pruned pair over the bar."""
     from metadata_reconciliation_tool_spark.operators import blocking as B
@@ -510,7 +510,7 @@ def test_prune_cutoff_respects_lower_decision_bar(spark, bundle):
     pairs = pairs.withColumn("pair_kind", F.lit("self")).localCheckpoint()
 
     bar = 0.45
-    on = S.score_pairs(pairs, prune_cutoff=bar).cache()
+    on = S.score_pairs(pairs, success_threshold=bar).cache()
     off = S.score_pairs(pairs, prefilter=False).cache()
     assert on.filter(F.col("score_pruned") & (F.col("score") >= bar)).count() == 0
     key = ["left_key", "right_key"]

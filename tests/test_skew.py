@@ -1,7 +1,7 @@
 """Skew stress for blocking: one pathological block (same-prefix entities)
 must be (a) split by salt fan-out with every pair produced exactly once,
 (b) droppable-and-reported at max_block_size, and (c) handled by the
-asymmetric (incremental) candidate path with batch-scaled output."""
+incremental (``new_keyed``) candidate path with batch-scaled output."""
 
 from __future__ import annotations
 
@@ -76,13 +76,13 @@ def test_asymmetric_candidates_under_skew(spark, hot_block):
     900 old ones — exactly the new-touching pairs, nothing old↔old."""
     from metadata_reconciliation_tool_spark.operators.blocking import (
         add_block_keys,
-        asymmetric_candidates,
+        self_candidates,
     )
 
     new = add_block_keys(hot_block.filter(F.col("entity_key") >= f"e{N - 100:05d}"))
-    allk = add_block_keys(hot_block)
-    pairs, dropped = asymmetric_candidates(
-        new, allk, max_block_size=N, rows_per_salt=64, max_salts=8
+    old = add_block_keys(hot_block.filter(F.col("entity_key") < f"e{N - 100:05d}"))
+    pairs, dropped = self_candidates(
+        old, max_block_size=N, rows_per_salt=64, max_salts=8, new_keyed=new
     )
     assert dropped.count() == 0
     expect = N * (N - 1) // 2 - (N - 100) * (N - 101) // 2
@@ -120,12 +120,13 @@ def test_asymmetric_corpus_salt_bounds_the_hottest_task(spark, hot_block):
     # |batch| x hottest bucket — no task sees the whole block's pair work
     from metadata_reconciliation_tool_spark.operators.blocking import (
         add_block_keys,
-        asymmetric_candidates,
+        self_candidates,
     )
 
     batch = hot_block.filter(F.col("entity_key") >= f"e{N - 100:05d}")
-    pairs, _ = asymmetric_candidates(
-        add_block_keys(batch), add_block_keys(hot_block),
+    old = hot_block.filter(F.col("entity_key") < f"e{N - 100:05d}")
+    pairs, _ = self_candidates(
+        add_block_keys(old), new_keyed=add_block_keys(batch),
         max_block_size=N, rows_per_salt=rows_per_salt, max_salts=max_salts,
     )
     per_block = (
@@ -216,14 +217,14 @@ def test_asymmetric_batch_broadcast_gate_parity(spark, hot_block):
     backfill batch must not be force-broadcast. Gate off == gate on."""
     from metadata_reconciliation_tool_spark.operators.blocking import (
         add_block_keys,
-        asymmetric_candidates,
+        self_candidates,
     )
 
     new = add_block_keys(hot_block.filter(F.crc32("entity_key") % 4 == 0))
-    alls = add_block_keys(hot_block)
-    hinted, _ = asymmetric_candidates(new, alls, max_block_size=N)
-    unhinted, _ = asymmetric_candidates(
-        new, alls, max_block_size=N, broadcast_max_rows=0
+    old = add_block_keys(hot_block.filter(F.crc32("entity_key") % 4 != 0))
+    hinted, _ = self_candidates(old, max_block_size=N, new_keyed=new)
+    unhinted, _ = self_candidates(
+        old, max_block_size=N, broadcast_max_rows=0, new_keyed=new
     )
     a = sorted((r.left_key, r.right_key) for r in hinted.collect())
     b = sorted((r.left_key, r.right_key) for r in unhinted.collect())

@@ -10,11 +10,11 @@ from __future__ import annotations
 import pandas as pd
 import pyspark.sql.functions as F
 
+from blocking_spec import dedup_pairs
 from metadata_reconciliation_tool_spark.operators import blocking as B
 from metadata_reconciliation_tool_spark.operators.blocking import (
     _pass_keys,
     add_block_keys,
-    dedup_pairs,
     dictionary_candidates,
     self_candidates,
 )
@@ -148,3 +148,30 @@ def test_winner_filter_keeps_exactly_one_row_per_pair(spark):
     pairs, _ = self_candidates(ents, 1000)
     got = [(r.left_key, r.right_key) for r in pairs.collect()]
     assert len(got) == len(set(got))
+
+
+def test_ingest_candidates_equal_full_run_restricted_to_new(spark):
+    """The ingest shape (``new_keyed``) must build exactly the pairs a full
+    run over old ∪ new builds that touch the batch — same keys, same
+    winning (block_pass, block_key), same payload — with blocks kept
+    (cap 1000) and with blocks dropped (cap 3), where the survival mask
+    over the touched blocks decides the winner."""
+    rows = [(f"e{i:03d}", n, "person") for i, n in enumerate(_NAMES)]
+    new_ids = [k for i, (k, _, _) in enumerate(rows) if i % 2 == 1]
+    ents = _keyed(spark, rows)
+    old = ents.filter(~F.col("entity_key").isin(new_ids))
+    new = ents.filter(F.col("entity_key").isin(new_ids))
+    for cap in (1000, 3):
+        full, full_dropped = self_candidates(ents, cap)
+        touching = full.filter(
+            F.col("left_key").isin(new_ids) | F.col("right_key").isin(new_ids)
+        )
+        got, _ = self_candidates(old, cap, new_keyed=new)
+        n = _assert_frames_equal(touching.drop("left_toks", "right_toks"), got)
+        assert n > 0
+        both_new = got.filter(
+            F.col("left_key").isin(new_ids) & F.col("right_key").isin(new_ids)
+        )
+        assert both_new.count() > 0  # new↔new pairs are exercised
+        if cap == 3:
+            assert full_dropped.count() > 0  # the survival mask matters

@@ -1,8 +1,9 @@
 """Capture the recon scoring stage's .explain("formatted") to a file.
 
-Builds the same lazy blocking+scoring+cap frame the pipeline materializes
-(bench-scale fixture inputs, sf0.1 sizes) and writes the formatted plan —
-used for the plans/r06 before/after evidence.
+Builds the blocking+scoring+cap frame through the pipeline's own candidate
+plan (``build_candidate_pairs``) and default ``ReconConfig`` bars, on
+bench-scale fixture inputs, and writes the formatted plan — for comparing
+the scoring plan before and after a change.
 
 Usage: python tools/capture_scoring_plan.py plans/r06/recon_scoring_stage_after.txt
 """
@@ -18,9 +19,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main() -> None:
     out_path = sys.argv[1]
 
-    from pyspark.sql import functions as F
-
-    from metadata_reconciliation_tool_spark import operators
     from metadata_reconciliation_tool_spark.fixtures import (
         build_variants,
         entity_pool,
@@ -30,6 +28,10 @@ def main() -> None:
     from metadata_reconciliation_tool_spark.operators import blocking as B
     from metadata_reconciliation_tool_spark.operators import extract as E
     from metadata_reconciliation_tool_spark.operators import scoring as S
+    from metadata_reconciliation_tool_spark.plans.pipeline import (
+        ReconConfig,
+        build_candidate_pairs,
+    )
     from metadata_reconciliation_tool_spark.session import build_session
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -48,20 +50,18 @@ def main() -> None:
         "overwrite"
     ).parquet(work)
     distinct = spark.read.parquet(work)
-    ekeyed = B.add_block_keys(distinct)
-    dprep = E.prepare_dictionary(dictionary).repartition(
-        spark.sparkContext.defaultParallelism
+    cfg = ReconConfig(job_id="capture_scoring_plan", work_dir=work)
+    pairs, _ = build_candidate_pairs(
+        B.add_block_keys(distinct),
+        dictionary,
+        B.dict_broadcast_gate(dictionary, cfg.broadcast_max_rows),
+        cfg.max_block_size,
+        broadcast_max_rows=cfg.broadcast_max_rows,
     )
-    dkeyed = B.add_block_keys(dprep, "norm_label")
-    dict_pairs = B.dictionary_candidates(ekeyed, dkeyed, broadcast=True).withColumn(
-        "pair_kind", F.lit("dict")
+    scored = S.score_pairs(
+        pairs, cfg.match_threshold, success_threshold=cfg.success_threshold
     )
-    self_pairs, _ = B.self_candidates(ekeyed, 100)
-    pairs = dict_pairs.unionByName(
-        self_pairs.withColumn("pair_kind", F.lit("self")), allowMissingColumns=True
-    )
-    scored = S.score_pairs(pairs, 0.70, prune_cutoff=0.5)
-    capped = S.cap_persisted_scores(scored, 10)
+    capped = S.cap_persisted_scores(scored, cfg.top_k)
 
     plan = capped._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
